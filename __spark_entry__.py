@@ -3606,7 +3606,7 @@ PPR_BATCH_SEEDS = [1, 2, 3]
 
 def _q_ppr_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch personalized PageRank (pagerank.ppr_batch): |seeds| restart
-    distributions in ONE job — one scatter join per superstep total, not
+    distributions in ONE loop — one scatter join per superstep total, not
     per seed. The per-seed twin is ppr_bipartite; this row proves the
     batched state (seed, id) reproduces it exactly for every seed."""
     from sparkgraph.algorithms.pagerank import ppr_batch

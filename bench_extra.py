@@ -59,9 +59,7 @@ def main() -> None:
         pagerank(g, mode="reference", iterations=2).state.count()  # warm
         r = timed("pagerank10_bip", lambda: pagerank(g, mode="reference", iterations=10))
         timed("pagerank10_bip_action", lambda: r.state.count())
-        # per-superstep seconds are plan-construction in lazy mode; re-run eager
-        r2 = pagerank(g, mode="reference", iterations=10, eager_checkpoint=True)
-        print("  eager superstep secs:", [m.seconds for m in r2.metrics], flush=True)
+        print("  superstep secs:", [m.seconds for m in r.metrics], flush=True)
         g.unpersist()
 
     if on("powerlaw"):
@@ -69,9 +67,8 @@ def main() -> None:
         g = Graph(powerlaw_edges(spark, POWERLAW_EDGES, POWERLAW_VERTS))
         timed("pl_graph_setup", lambda: g.edges_sym.count())
         pagerank(g, mode="reference", iterations=2).state.count()  # warm
-        timed("pagerank10_pl", lambda: pagerank(g, mode="reference", iterations=10).state.count())
-        r2 = pagerank(g, mode="reference", iterations=10, eager_checkpoint=True)
-        print("  eager superstep secs:", [m.seconds for m in r2.metrics], flush=True)
+        r = timed("pagerank10_pl", lambda: pagerank(g, mode="reference", iterations=10))
+        print("  superstep secs:", [m.seconds for m in r.metrics], flush=True)
         g.unpersist()
 
     if on("csr"):

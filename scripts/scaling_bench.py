@@ -38,13 +38,9 @@ _ = g.num_vertices
 _ = g.degrees.count()
 
 out = {{"cores": cores, "sym_edges": n_sym}}
-for name, fn, timeable in [
-    # eager per-superstep jobs so median_step_seconds measures real execution;
-    # the default lazy mode runs the loop as one job (faster, per-step
-    # untimeable) and reports whole-job numbers only
-    ("relational", lambda: pagerank(g, mode="reference", iterations={iters}, eager_checkpoint=True), True),
-    ("relational_lazy", lambda: pagerank(g, mode="reference", iterations={iters}), False),
-    ("csr", lambda: pagerank_csr(g, mode="reference", iterations={iters}, combine={combine!r}), True),
+for name, fn in [
+    ("relational", lambda: pagerank(g, mode="reference", iterations={iters})),
+    ("csr", lambda: pagerank_csr(g, mode="reference", iterations={iters}, combine={combine!r})),
 ]:
     t0 = time.monotonic()
     res = fn()
@@ -55,11 +51,10 @@ for name, fn, timeable in [
         "supersteps_per_sec": round({iters} / dt, 3),
         "edges_per_sec": round({iters} * n_sym / dt, 1),
     }}
-    if timeable:
-        steps = sorted(m.seconds for m in res.metrics)
-        median = steps[len(steps) // 2]
-        out[name]["median_step_seconds"] = round(median, 3)
-        out[name]["steady_edges_per_sec"] = round(n_sym / median, 1)
+    steps = sorted(m.seconds for m in res.metrics)
+    median = steps[len(steps) // 2]
+    out[name]["median_step_seconds"] = round(median, 3)
+    out[name]["steady_edges_per_sec"] = round(n_sym / median, 1)
 spark.stop()
 print("RESULT " + json.dumps(out))
 """
@@ -68,10 +63,10 @@ print("RESULT " + json.dumps(out))
 def run_level(cores: int, edges: int, verts: int, iters: int, combine: str = "auto") -> dict:
     code = _CHILD.format(repo=REPO, cores=cores, edges=edges, verts=verts, iters=iters, combine=combine)
     env = dict(os.environ)
-    # heap sized to the data (min 6g): the child runs THREE kernels in one
-    # session (relational eager + lazy + CSR) and the accumulated checkpoint/
-    # broadcast residue of the first two killed 4g-heap children mid-CSR
-    # (context shutdown observed round 3); small heaps also GC-stall the loop
+    # heap sized to the data (min 6g): the child runs two kernels in one
+    # session (relational + CSR), and the checkpoint/broadcast residue of the
+    # relational runs killed 4g-heap children mid-CSR; small heaps also
+    # GC-stall the loop
     env["SPARK_GRAFT_DRIVER_MEM"] = f"{max(6, edges // 1_500_000)}g"
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True,
@@ -105,16 +100,15 @@ def main() -> None:
         "high": high,
         "efficiency": {},
     }
-    for k in ("relational", "relational_lazy", "csr"):
+    for k in ("relational", "csr"):
         speedup = high[k]["edges_per_sec"] / low[k]["edges_per_sec"]
+        steady = high[k]["steady_edges_per_sec"] / low[k]["steady_edges_per_sec"]
         report["efficiency"][k] = {
             "speedup": round(speedup, 3),
             "scaling_efficiency": round(speedup / 4.0, 3),
+            "steady_speedup": round(steady, 3),
+            "steady_scaling_efficiency": round(steady / 4.0, 3),
         }
-        if "steady_edges_per_sec" in high[k] and "steady_edges_per_sec" in low[k]:
-            steady = high[k]["steady_edges_per_sec"] / low[k]["steady_edges_per_sec"]
-            report["efficiency"][k]["steady_speedup"] = round(steady, 3)
-            report["efficiency"][k]["steady_scaling_efficiency"] = round(steady / 4.0, 3)
     print(json.dumps(report))
 
 

@@ -46,10 +46,11 @@ def connected_components(
     edges = graph.edges_sym
     loop = SuperstepLoop("connected_components", {}, checkpointer, resume)
 
-    restored = loop.try_resume(spark)
+    restored = loop.try_resume(
+        spark, ["id", "component", "changed"], graph.num_partitions
+    )
     if restored is not None:
         start_step, state = restored
-        state = truncate_lineage(state.select("id", "component", "changed"))
     else:
         start_step = 0
         base = graph.vertices

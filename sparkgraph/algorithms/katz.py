@@ -13,7 +13,7 @@ Taylor prefix of (I − αAᵀ)⁻¹β𝟙. Convergence of the full series needs
 gate pins. Same scatter/gather plan shape as pagerank: persisted
 pre-partitioned symmetrized edges never re-exchange; state builds the hash
 side (``hint("shuffle_hash")``); per-superstep map-side partial aggregation;
-lineage truncated lazily so the fixed-iteration loop runs as one job.
+lineage truncated eagerly every superstep, as in pagerank.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ def katz_centrality(
     alpha: float = 0.05,
     beta: float = 1.0,
     iterations: int = 10,
-    eager_checkpoint: bool = False,
 ) -> PregelResult:
     """Returns state ``(id, value)`` — truncated Katz scores on the
     symmetrized multigraph (parallel edges count, matching pagerank's
@@ -59,9 +58,6 @@ def katz_centrality(
                 "value"
             ),
         )
-        # lazy runs truncate every second superstep (see pagerank: same
-        # cadence measurement); eager keeps per-superstep truncation
-        if eager_checkpoint or step % 2 == 0 or step >= iterations:
-            state = truncate_lineage(state, eager=eager_checkpoint)
+        state = truncate_lineage(state)  # eager, every superstep (see pagerank)
         loop.step_done(state, step)
     return loop.finish(state, step, True, result=state.select("id", "value"))

@@ -43,10 +43,9 @@ def label_propagation(
     edges = graph.edges_sym
     loop = SuperstepLoop("label_propagation", {"max_iter": max_iter}, checkpointer, resume)
 
-    restored = loop.try_resume(spark)
+    restored = loop.try_resume(spark, ["id", "label"], graph.num_partitions)
     if restored is not None:
         start_step, state = restored
-        state = truncate_lineage(state.select("id", "label"))
     else:
         start_step = 0
         state = truncate_lineage(graph.vertices.select("id", F.col("id").alias("label")))

@@ -45,11 +45,12 @@ def pagerank(
     salts: int = 16,
     reset_to: int | None = None,
     weighted: bool = False,
-    eager_checkpoint: bool | None = None,
     initial_state: DataFrame | None = None,
 ) -> PregelResult:
     """Returns state ``(id, value)``; ``result.metrics`` carries per-superstep
-    wall time and (in convergence mode) the max-abs delta.
+    wall time and (in convergence mode) the max-abs delta. Every superstep
+    ends in an eager lineage truncation, so it runs as one Spark job and its
+    ``metrics.seconds`` is its execution time.
 
     ``salting_threshold``: when set, gathers for vertices whose symmetrized
     degree exceeds it run through the explicit two-phase salted aggregation
@@ -65,14 +66,6 @@ def pagerank(
     (weights are hard-coded 1.0 in the reference loader, worker/worker.go:165
     — both modes agree on unit-weight graphs).
 
-    ``eager_checkpoint``: default (None) = lazy per-superstep checkpoints in
-    reference mode — the plan is truncated each superstep but the whole
-    fixed-iteration loop executes as ONE job at the terminal action,
-    amortizing per-job scheduling/AQE-planning fixed cost (NB: per-superstep
-    ``metrics.seconds`` then measure plan construction, not execution).
-    Convergence mode is always effectively eager (the delta collect runs the
-    superstep); pass True to force eager jobs for per-superstep timing.
-
     ``initial_state``: optional ``(id, value)`` warm start (convergence
     mode) — e.g. the previous scores of an incrementally growing graph. The
     damped iteration converges to the same fixpoint from any start, so this
@@ -81,8 +74,6 @@ def pagerank(
     dropped."""
     if mode not in ("reference", "convergence"):
         raise ValueError(f"unknown mode {mode!r}")
-    if eager_checkpoint is None:
-        eager_checkpoint = mode == "convergence"
     spark = graph.spark
     n = graph.num_vertices
     if n == 0:
@@ -104,10 +95,9 @@ def pagerank(
     )
 
     init_value = 0.0 if mode == "reference" else 1.0 / n
-    restored = loop.try_resume(spark)
+    restored = loop.try_resume(spark, ["id", "deg", "value"], graph.num_partitions)
     if restored is not None:
         start_step, state = restored
-        state = truncate_lineage(state.select("id", "deg", "value"))
     else:
         start_step = 0
         deg_src = (
@@ -180,17 +170,11 @@ def pagerank(
                 F.col("value").alias("prev"),
             )
         )
-        # Lazy fixed-iteration runs truncate every SECOND superstep: each
-        # localCheckpoint still caches a full state copy and costs a plan
-        # round-trip, and a 2-superstep plan is far from the analysis
-        # blow-up point (measured: cadence 2 ≈ cadence 5 ≈ −13% vs every
-        # superstep; never truncating is 3× slower). Eager/convergence mode
-        # keeps per-superstep truncation (the delta action materializes
-        # every step anyway).
-        if eager_checkpoint or step % 2 == 0 or (
-            mode == "reference" and step >= iterations
-        ):
-            new_state = truncate_lineage(new_state, eager=eager_checkpoint)
+        # Eager truncation every superstep. The state keeps its hash
+        # partitioning on id, so the gather is the superstep's only shuffle.
+        # Lazy cuts every second superstep run fewer jobs but are slower: the
+        # untruncated odd-step state feeds both joins and is computed twice.
+        new_state = truncate_lineage(new_state)
 
         delta = None
         if mode == "convergence":
@@ -214,7 +198,7 @@ def ppr_batch(
     iterations: int = 30,
     damping: float = 0.85,
 ) -> DataFrame:
-    """Personalized PageRank for MANY restart vertices in ONE job:
+    """Personalized PageRank for MANY restart vertices in ONE loop:
     ``(seed, id, value)`` — the batch analog of ``pagerank(reset_to=s)``
     run |sources| times, at one scatter join per superstep instead of
     |sources|. Reference-mode semantics per seed (zeros init, exactly
@@ -246,7 +230,7 @@ def ppr_batch(
         "seed", "id", F.col("deg").cast("double").alias("deg"),
         F.lit(0.0).alias("value"),
     )
-    for it in range(iterations):
+    for _ in range(iterations):
         src_state = state.select(
             "seed",
             F.col("id").alias("src"),
@@ -269,11 +253,7 @@ def ppr_batch(
                 "value"
             ),
         )
-        # lazy, cadence-2 truncation (see pagerank): the whole batch runs as
-        # ONE job at the terminal action instead of one eager job per
-        # superstep, halving the cached state copies along the way
-        if it % 2 == 1 or it == iterations - 1:
-            state = truncate_lineage(state, eager=False)
+        state = truncate_lineage(state)  # eager, every superstep (see pagerank)
     return state.select("seed", "id", "value")
 
 

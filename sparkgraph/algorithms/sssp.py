@@ -53,10 +53,9 @@ def sssp(
     loop = SuperstepLoop("sssp", {"source": source}, checkpointer, resume)
 
     state_cols = ["id", "dist", "changed"] + (["parent"] if track_parents else [])
-    restored = loop.try_resume(spark)
+    restored = loop.try_resume(spark, state_cols, graph.num_partitions)
     if restored is not None:
         start_step, state = restored
-        state = truncate_lineage(state.select(*state_cols))
     else:
         start_step = 0
         init = graph.vertices.select(

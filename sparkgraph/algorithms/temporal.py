@@ -79,10 +79,9 @@ def temporal_earliest_arrival(
         resume,
     )
 
-    restored = loop.try_resume(spark)
+    restored = loop.try_resume(spark, ["id", "arrival", "changed"], n_parts)
     if restored is not None:
         start_step, state = restored
-        state = truncate_lineage(state.select("id", "arrival", "changed"))
     else:
         start_step = 0
         is_src = F.col("id").isin([int(s) for s in sources])

@@ -31,6 +31,11 @@ _log = logging.getLogger("sparkgraph")
 # makes that visible instead of returning a silently-partial result.
 MAX_FIXPOINT_ITERS = 10_000
 
+# Loop parameters that only bound when a run halts: a resume may change them
+# (e.g. continue a 10-superstep run to 30); every other recorded parameter
+# must match the checkpoint's.
+HALTING_PARAMS = frozenset({"iterations", "max_iter", "tol"})
+
 
 def warn_unconverged(
     algorithm: str,
@@ -55,17 +60,29 @@ def warn_unconverged(
 def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """localCheckpoint: cuts the logical plan so iterative loops don't grow
     unbounded lineage (the classic Spark iterative-workload footgun).
-    Preserves partitioning.
 
-    ``eager=True`` materializes now — one Spark job per call, which is the
-    right shape when the loop needs the data anyway (convergence deltas,
-    frontier counts). ``eager=False`` truncates the plan immediately but
-    defers execution to the terminal action: a fixed-iteration loop then runs
-    as ONE job instead of one per superstep, amortizing the per-job
-    scheduling/planning fixed cost (measured: −30% wall on a fixed-cost-bound
-    graph, scripts/scaling_rootcause.py).
+    The input is planned and checkpointed with adaptive execution off (the
+    caller's ``spark.sql.adaptive.enabled`` is restored afterwards). A static
+    plan reports its real output partitioning, and the checkpointed
+    ``LogicalRDD`` keeps it: state built from a join or aggregation on ``id``
+    scans as ``hashpartitioning(id, n)``. Against the ``src``-partitioned
+    ``edges_sym`` neither the scatter join nor the apply join then re-exchanges
+    the state, so the ``groupBy(dst)`` gather is a superstep's only shuffle.
+    An adaptive plan scans as ``UnknownPartitioning`` instead, and building
+    its RDD runs its shuffle stages at call time even when ``eager=False``.
+
+    ``eager=True`` materializes now — one Spark job per call. ``eager=False``
+    cuts the plan now and defers execution to the next action on the result:
+    the right shape when the loop runs an action on the new state anyway
+    (a changed count), so checkpoint and count run as one job.
     """
-    return df.localCheckpoint(eager=eager)
+    conf = df.sparkSession.conf
+    caller_aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df.localCheckpoint(eager=eager)
+    finally:
+        conf.set("spark.sql.adaptive.enabled", caller_aqe)
 
 
 def partition_lineage(df: DataFrame, cols: list[str]) -> list[dict]:
@@ -183,8 +200,8 @@ class Checkpointer:
 
 class SuperstepLoop:
     """Bookkeeping shared by all iterative algorithms: wall-clock per
-    superstep, optional convergence deltas, lineage truncation cadence, and
-    checkpoint writes. The per-algorithm scatter/gather/apply logic stays in
+    superstep, optional convergence deltas, checkpoint writes and resume.
+    The per-algorithm scatter/gather/apply logic stays in
     ``sparkgraph.algorithms`` — this only owns the loop mechanics (A9/A10).
     """
 
@@ -203,15 +220,50 @@ class SuperstepLoop:
         self._t0 = time.monotonic()
         self._last_saved: int | None = None
 
-    def try_resume(self, spark) -> tuple[int, DataFrame] | None:
+    def try_resume(
+        self, spark, columns: list[str], num_partitions: int
+    ) -> tuple[int, DataFrame] | None:
+        """(superstep, state) of the newest checkpoint, or None. The state is
+        the checkpoint's ``columns``, hash-partitioned on ``id`` into
+        ``num_partitions`` inside its lineage truncation, so the first
+        superstep after a resume shuffles only its gather, like any other.
+
+        Raises ``ValueError`` when that checkpoint was written by another
+        algorithm or with other parameters (halting bounds aside, so a run
+        may resume to a larger ``iterations``). The check reads only the
+        manifest."""
         if not (self.resume and self.checkpointer):
             return None
+        found = self.checkpointer.latest()
+        if found is None:
+            return None
+        manifest = found[2]
+        if manifest["algorithm"] != self.algorithm:
+            raise ValueError(
+                f"cannot resume {self.algorithm} from a {manifest['algorithm']} "
+                f"checkpoint in {self.checkpointer.directory}"
+            )
+        recorded = manifest.get("params", {})
+        current = json.loads(json.dumps(self.params))  # compare as saved
+        differ = sorted(
+            k
+            for k in recorded.keys() | current.keys()
+            if k not in HALTING_PARAMS and recorded.get(k) != current.get(k)
+        )
+        if differ:
+            raise ValueError(
+                f"cannot resume {self.algorithm}: checkpoint params differ in "
+                + ", ".join(
+                    f"{k} ({recorded.get(k)!r} != {current.get(k)!r})" for k in differ
+                )
+            )
         restored = self.checkpointer.restore(spark)
         if restored is None:
             return None
         superstep, state, metrics = restored
         self.metrics = metrics
-        return superstep, state
+        state = state.select(*columns).repartition(num_partitions, "id")
+        return superstep, truncate_lineage(state)
 
     def step_started(self) -> None:
         self._t0 = time.monotonic()

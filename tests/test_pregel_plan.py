@@ -1,0 +1,104 @@
+"""Plan shape of the superstep loops: truncated loop state keeps its hash
+partitioning on ``id``, so the ``groupBy`` gather is a superstep's only
+shuffle, and truncation leaves the caller's AQE setting as it found it."""
+
+from importlib import import_module
+
+import pytest
+from pyspark.sql import functions as F
+
+from sparkgraph.algorithms import connected_components, pagerank
+from sparkgraph.graph import Graph
+from sparkgraph.io.edgelist import edges_from_pairs
+from sparkgraph.pregel import Checkpointer, truncate_lineage
+
+from tests.fixtures import GRAPH_MAIN
+
+AQE = "spark.sql.adaptive.enabled"
+# the package re-exports the functions under the modules' names
+pagerank_mod = import_module("sparkgraph.algorithms.pagerank")
+components_mod = import_module("sparkgraph.algorithms.components")
+pregel_mod = import_module("sparkgraph.pregel")
+
+
+@pytest.fixture
+def graph(spark):
+    g = Graph(edges_from_pairs(spark, GRAPH_MAIN), num_partitions=4)
+    yield g
+    g.unpersist()
+
+
+def _nodes(plan):
+    """Physical plan nodes reached through ``children()``. A persisted input
+    (InMemoryTableScan) is a leaf: its cached plan is not walked."""
+    out = [plan]
+    kids = plan.children()
+    for i in range(kids.size()):
+        out += _nodes(kids.apply(i))
+    return out
+
+
+def _exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    return [
+        n.outputPartitioning().toString()
+        for n in _nodes(plan)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+
+
+def _recording(monkeypatch, *modules):
+    """Wrap ``truncate_lineage`` in ``modules`` to keep every DataFrame it
+    cuts: the first is the initial (or restored) state, then one per
+    superstep."""
+    seen = []
+
+    def record(df, eager=True):
+        seen.append(df)
+        return truncate_lineage(df, eager=eager)
+
+    for module in modules:
+        monkeypatch.setattr(module, "truncate_lineage", record)
+    return seen
+
+
+def test_truncated_state_reports_hash_partitioning_on_id(graph):
+    state = truncate_lineage(graph.vertices.join(graph.degrees, "id"))
+    part = state._jdf.queryExecution().executedPlan().outputPartitioning()
+    assert part.getClass().getSimpleName() == "HashPartitioning"
+    assert part.toString().startswith("hashpartitioning(id#")
+
+
+def test_pagerank_superstep_has_one_exchange_keyed_on_dst(graph, monkeypatch):
+    seen = _recording(monkeypatch, pagerank_mod)
+    pagerank(graph, mode="reference", iterations=1)
+    assert len(seen) == 2  # initial state, superstep 1
+    (exchange,) = _exchanges(seen[1])
+    assert exchange.startswith("hashpartitioning(dst#")
+
+
+def test_resumed_superstep_has_one_exchange(graph, monkeypatch, tmp_path):
+    ckdir = str(tmp_path / "cc")
+    connected_components(graph, max_iter=1, checkpointer=Checkpointer(ckdir, every=1))
+    seen = _recording(monkeypatch, pregel_mod, components_mod)
+    res = connected_components(graph, checkpointer=Checkpointer(ckdir, every=1), resume=True)
+    assert res.converged
+    # the restored Parquet state is hash-partitioned inside its truncation …
+    (restore,) = _exchanges(seen[0])
+    assert restore.startswith("hashpartitioning(id#")
+    # … so the first superstep after the resume only shuffles its gather
+    assert len(_exchanges(seen[1])) == 1
+
+
+@pytest.mark.parametrize("caller", ["true", "false"])
+def test_truncate_restores_callers_aqe(spark, caller):
+    before = spark.conf.get(AQE)
+    spark.conf.set(AQE, caller)
+    try:
+        truncate_lineage(spark.range(4))
+        assert spark.conf.get(AQE) == caller
+        with pytest.raises(Exception, match="boom"):
+            truncate_lineage(spark.range(1).select(F.raise_error(F.lit("boom"))))
+        assert spark.conf.get(AQE) == caller
+    finally:
+        spark.conf.set(AQE, before)

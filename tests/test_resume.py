@@ -6,7 +6,9 @@ import json
 import math
 import os
 
-from sparkgraph.algorithms import pagerank, sssp
+import pytest
+
+from sparkgraph.algorithms import connected_components, pagerank, sssp
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 from sparkgraph.pregel import Checkpointer
@@ -64,6 +66,27 @@ def test_manifest_carries_partition_lineage_and_metrics(spark, tmp_path):
     assert sum(p["rows"] for p in man["partitions"]) == 23
     assert all("value_hash" in p for p in man["partitions"])
     assert len(man["metrics"]) == 3
+    g.unpersist()
+
+
+def test_pagerank_refuses_a_cc_checkpoint(spark, tmp_path):
+    g = _graph(spark)
+    ckdir = str(tmp_path / "cc")
+    connected_components(g, max_iter=2, checkpointer=Checkpointer(ckdir, every=1))
+    with pytest.raises(ValueError, match="connected_components checkpoint"):
+        pagerank(g, mode="reference", iterations=5,
+                 checkpointer=Checkpointer(ckdir, every=1), resume=True)
+    g.unpersist()
+
+
+def test_pagerank_refuses_other_damping(spark, tmp_path):
+    g = _graph(spark)
+    ckdir = str(tmp_path / "pr")
+    pagerank(g, mode="reference", iterations=2, damping=0.85,
+             checkpointer=Checkpointer(ckdir, every=2))
+    with pytest.raises(ValueError, match="damping"):
+        pagerank(g, mode="reference", iterations=5, damping=0.5,
+                 checkpointer=Checkpointer(ckdir, every=2), resume=True)
     g.unpersist()
 
 
