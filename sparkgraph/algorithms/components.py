@@ -60,29 +60,31 @@ def connected_components(
                 "id", F.coalesce("warm", F.col("id")).alias("component")
             )
         else:
-            base = base.select("id", F.col("id").alias("component"))
+            # not a bare alias: with `id AS component` the plan is partitioned
+            # on `component` or `id`, the checkpoint keeps only the first, and
+            # every superstep's joins would re-exchange the state
+            base = base.select("id", F.least("id", "id").alias("component"))
         state = truncate_lineage(base.withColumn("changed", F.lit(True)))
+
+    # The loop body's Columns are built once: each one is a Py4J round trip.
+    scatter = [F.col("id").alias("src"), F.col("component").alias("flabel")]
+    dst_as_id = F.col("dst").alias("id")
+    gather = F.min("flabel").alias("mlabel")
+    best = F.coalesce("mlabel", F.col("component"))
+    apply = [
+        "id",
+        F.least("component", best).alias("component"),
+        (best < F.col("component")).alias("changed"),
+    ]
 
     step = start_step
     converged = False
     while step < max_iter:
         loop.step_started()
-        frontier = state.filter("changed").select(
-            F.col("id").alias("src"), F.col("component").alias("flabel")
-        )
-        msgs = edges.join(frontier.hint("shuffle_hash"), "src").select(
-            F.col("dst").alias("id"), F.col("flabel").alias("msg")
-        )
-        mins = msgs.groupBy("id").agg(F.min("msg").alias("mlabel"))
-        new_state = state.drop("changed").join(mins, "id", "left").select(
-            "id",
-            F.least("component", F.coalesce("mlabel", F.col("component"))).alias(
-                "component"
-            ),
-            (F.coalesce("mlabel", F.col("component")) < F.col("component")).alias(
-                "changed"
-            ),
-        )
+        frontier = state.filter("changed").select(*scatter)
+        msgs = edges.join(frontier.hint("shuffle_hash"), "src")
+        mins = msgs.groupBy(dst_as_id).agg(gather)
+        new_state = state.join(mins, "id", "left").select(*apply)
         # lazy truncation: the changed-count is the superstep's single action
         # (materializes the checkpoint as a side effect — one job, not two)
         new_state = truncate_lineage(new_state, eager=False)

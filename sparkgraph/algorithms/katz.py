@@ -43,21 +43,17 @@ def katz_centrality(
     state = truncate_lineage(
         graph.vertices.select("id", F.lit(0.0).alias("value"))
     )
+    # built once, as in pagerank; every vertex gets a message along each of
+    # its edges, so the aggregate is the whole new state
+    scatter = [F.col("id").alias("src"), "value"]
+    dst_as_id = F.col("dst").alias("id")
+    update = (F.lit(beta) + F.lit(alpha) * F.sum("value")).alias("value")
     step = 0
     while step < iterations:
         loop.step_started()
         step += 1
-        src_state = state.select(F.col("id").alias("src"), F.col("value").alias("contrib"))
-        msgs = edges.join(src_state.hint("shuffle_hash"), "src").select(
-            "dst", F.col("contrib").alias("msg")
-        )
-        sums = msgs.groupBy(F.col("dst").alias("id")).agg(F.sum("msg").alias("msum"))
-        state = state.join(sums, "id", "left").select(
-            "id",
-            (F.lit(beta) + F.lit(alpha) * F.coalesce("msum", F.lit(0.0))).alias(
-                "value"
-            ),
-        )
-        state = truncate_lineage(state)  # eager, every superstep (see pagerank)
+        msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
+        # eager, every superstep (see pagerank)
+        state = truncate_lineage(msgs.groupBy(dst_as_id).agg(update))
         loop.step_done(state, step)
     return loop.finish(state, step, True, result=state.select("id", "value"))

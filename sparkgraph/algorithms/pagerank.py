@@ -18,9 +18,12 @@ Two halting modes:
     fixpoint is unique, so both modes agree in the limit.
 
 Spark plan per superstep: one scatter join (edge table pre-partitioned by
-``src``, never reshuffled) + one ``groupBy(dst).sum`` whose map-side partial
+``src``, never reshuffled) + one ``groupBy(dst)`` whose map-side partial
 aggregation subsumes the reference's per-VM message combiner
-(worker/worker.go:269-284) + one state outer-join. The shuffle IS the barrier.
+(worker/worker.go:269-284). The shuffle IS the barrier. The aggregate is the
+new state: on the symmetrized multigraph every vertex receives one message
+per incident edge end, so its message count is its degree (its weight sum
+the weighted degree) and no vertex needs a state join to be kept.
 """
 
 from __future__ import annotations
@@ -100,12 +103,11 @@ def pagerank(
         start_step, state = restored
     else:
         start_step = 0
-        deg_src = (
+        base = (
             graph.weighted_degrees.withColumnRenamed("wdeg", "deg")
             if weighted
             else graph.degrees
         )
-        base = graph.vertices.join(deg_src, "id")
         if initial_state is not None:
             warm = initial_state.select("id", F.col("value").alias("warm"))
             base = base.join(warm, "id", "left")
@@ -119,73 +121,68 @@ def pagerank(
             )
         )
 
+    # The loop body's Columns are built once: each one is a Py4J round trip.
+    # Scatter (A5): contribution value/deg along every symmetrized edge.
+    scatter = [F.col("id").alias("src"), (F.col("value") / F.col("deg")).alias("contrib")]
+    msg = (F.col("contrib") * F.col("weight")) if weighted else F.col("contrib")
+    # Gather (A6+A7): partial aggregation before the shuffle. Every vertex gets
+    # a message along each of its symmetrized edges, so the aggregate is the
+    # whole state: message count (weight sum) = degree (weighted degree).
+    gather = [
+        (F.sum("weight") if weighted else F.count(F.lit(1)).cast("double")).alias("deg"),
+        F.sum(msg).alias("msum"),
+    ]
+    # Apply (A8): damped update.
+    apply = ["id", "deg", (teleport_col + F.lit(damping) * F.col("msum")).alias("value")]
+    dst_as_id = F.col("dst").alias("id")
+    prev = ["id", F.col("value").alias("prev")]
+    max_delta = F.max(F.abs(F.col("value") - F.col("prev")))
+
     hubs = None
-    if salting_threshold is not None:
-        from sparkgraph.skew import top_degree_hubs
-
-        hubs = top_degree_hubs(graph.degrees, salting_threshold).persist()
-        hubs.count()
-
     step = start_step
     converged = False
-    while True:
-        if mode == "reference":
-            if step >= iterations:
+    try:
+        if salting_threshold is not None:
+            from sparkgraph.skew import salted_message_sum, top_degree_hubs
+
+            hubs = top_degree_hubs(graph.degrees, salting_threshold).persist()
+            hubs.count()
+        while step < (iterations if mode == "reference" else max_iter):
+            loop.step_started()
+            step += 1
+
+            # shuffle-hash: build on the (small) state side, stream the
+            # persisted pre-partitioned edge side without re-sorting it
+            msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
+            if hubs is None:
+                new_state = msgs.groupBy(dst_as_id).agg(*gather).select(*apply)
+            else:
+                sums = salted_message_sum(
+                    msgs.select("dst", msg.alias("msg")), hubs, salts=salts
+                )
+                new_state = state.join(sums, "id").select(*apply)
+            # Eager truncation every superstep. The state keeps its hash
+            # partitioning on id, so the gather is the superstep's only
+            # shuffle. Lazy cuts every second superstep run fewer jobs but
+            # are slower: the untruncated state is computed twice.
+            new_state = truncate_lineage(new_state)
+
+            delta = None
+            if mode == "convergence":
+                # both states are hash-partitioned on id: no exchange
+                delta = (
+                    new_state.join(state.select(*prev).hint("shuffle_hash"), "id")
+                    .agg(max_delta)
+                    .collect()[0][0]
+                )
+            state = new_state
+            loop.step_done(state, step, delta=delta)
+            if mode == "convergence" and delta is not None and delta < tol:
+                converged = True
                 break
-        elif step >= max_iter:
-            break
-        loop.step_started()
-        step += 1
-
-        # Scatter (A5): contribution value/deg along every symmetrized edge.
-        src_state = state.select(
-            F.col("id").alias("src"), (F.col("value") / F.col("deg")).alias("contrib")
-        )
-        # shuffle-hash: build on the (small) state side, stream the persisted
-        # pre-partitioned edge side without re-sorting it each superstep
-        msg_expr = (
-            (F.col("contrib") * F.col("weight")) if weighted else F.col("contrib")
-        )
-        msgs = edges.join(src_state.hint("shuffle_hash"), "src").select(
-            "dst", msg_expr.alias("msg")
-        )
-        # Gather (A6+A7): sum per destination; partial agg before the shuffle.
+    finally:
         if hubs is not None:
-            from sparkgraph.skew import salted_message_sum
-
-            sums = salted_message_sum(msgs, hubs, salts=salts)
-        else:
-            sums = msgs.groupBy(F.col("dst").alias("id")).agg(
-                F.sum("msg").alias("msum")
-            )
-        # Apply (A8): damped update; vertices with no messages get teleport only.
-        new_state = (
-            state.join(sums, "id", "left")
-            .select(
-                "id",
-                "deg",
-                (
-                    teleport_col + F.lit(damping) * F.coalesce("msum", F.lit(0.0))
-                ).alias("value"),
-                F.col("value").alias("prev"),
-            )
-        )
-        # Eager truncation every superstep. The state keeps its hash
-        # partitioning on id, so the gather is the superstep's only shuffle.
-        # Lazy cuts every second superstep run fewer jobs but are slower: the
-        # untruncated odd-step state feeds both joins and is computed twice.
-        new_state = truncate_lineage(new_state)
-
-        delta = None
-        if mode == "convergence":
-            delta = new_state.agg(
-                F.max(F.abs(F.col("value") - F.col("prev")))
-            ).collect()[0][0]
-        state = new_state.drop("prev")
-        loop.step_done(state, step, delta=delta)
-        if mode == "convergence" and delta is not None and delta < tol:
-            converged = True
-            break
+            hubs.unpersist()
 
     if mode == "reference":
         converged = True  # fixed-iteration contract fulfilled
@@ -225,35 +222,29 @@ def ppr_batch(
     seeds = spark.createDataFrame(
         [(int(s),) for s in sorted(set(sources))], "seed long"
     )
-    base = graph.vertices.join(graph.degrees, "id").crossJoin(F.broadcast(seeds))
-    state = base.select(
+    state = graph.degrees.crossJoin(F.broadcast(seeds)).select(
         "seed", "id", F.col("deg").cast("double").alias("deg"),
         F.lit(0.0).alias("value"),
     )
+    # built once, as in pagerank; every (seed, vertex) pair gets a message
+    # along each of the vertex's edges, so the aggregate is the whole state
+    scatter = [
+        "seed",
+        F.col("id").alias("src"),
+        (F.col("value") / F.col("deg")).alias("contrib"),
+    ]
+    key = ["seed", F.col("dst").alias("id")]
+    teleport = F.when(
+        F.col("dst") == F.col("seed"), F.lit(1.0 - damping)
+    ).otherwise(F.lit(0.0))
+    gather = [
+        F.count(F.lit(1)).cast("double").alias("deg"),
+        (teleport + F.lit(damping) * F.sum("contrib")).alias("value"),
+    ]
     for _ in range(iterations):
-        src_state = state.select(
-            "seed",
-            F.col("id").alias("src"),
-            (F.col("value") / F.col("deg")).alias("contrib"),
-        )
-        msgs = edges.join(src_state.hint("shuffle_hash"), "src").select(
-            "seed", "dst", F.col("contrib").alias("msg")
-        )
-        sums = msgs.groupBy("seed", F.col("dst").alias("id")).agg(
-            F.sum("msg").alias("msum")
-        )
-        teleport = F.when(
-            F.col("id") == F.col("seed"), F.lit(1.0 - damping)
-        ).otherwise(F.lit(0.0))
-        state = state.join(sums, ["seed", "id"], "left").select(
-            "seed",
-            "id",
-            "deg",
-            (teleport + F.lit(damping) * F.coalesce("msum", F.lit(0.0))).alias(
-                "value"
-            ),
-        )
-        state = truncate_lineage(state)  # eager, every superstep (see pagerank)
+        msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
+        # eager, every superstep (see pagerank)
+        state = truncate_lineage(msgs.groupBy(*key).agg(*gather))
     return state.select("seed", "id", "value")
 
 

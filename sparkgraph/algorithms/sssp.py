@@ -67,35 +67,40 @@ def sssp(
             init = init.withColumn("parent", F.lit(None).cast("long"))
         state = truncate_lineage(init)
 
+    # The loop body's Columns are built once: each one is a Py4J round trip.
+    scatter = [F.col("id").alias("src"), F.col("dist").alias("fdist")]
+    # Scatter from the frontier only: propose dist + weight to neighbors.
+    proposal = F.col("fdist") + F.col("weight")
+    dst_as_id = F.col("dst").alias("id")
+    if track_parents:
+        # min over (msg, via): best distance, smallest-id predecessor
+        gather = F.min(
+            F.struct(proposal.alias("msg"), F.col("src").alias("via"))
+        ).alias("m")
+        mdist = F.col("m.msg")
+    else:
+        gather = F.min(proposal).alias("mdist")
+        mdist = F.col("mdist")
+    best = F.coalesce(mdist, F.lit(_INF))
+    improved = best < F.col("dist")
+    apply = [
+        F.col("id"),
+        F.least("dist", best).alias("dist"),
+        improved.alias("changed"),
+    ]
+    if track_parents:
+        apply.append(
+            F.when(improved, F.col("m.via")).otherwise(F.col("parent")).alias("parent")
+        )
+
     step = start_step
     converged = False
     while step < max_iter:
         loop.step_started()
-        frontier = state.filter("changed").select(
-            F.col("id").alias("src"), F.col("dist").alias("fdist")
-        )
-        # Scatter from the frontier only: propose dist + weight to neighbors.
-        msgs = edges.join(frontier.hint("shuffle_hash"), "src").select(
-            F.col("dst").alias("id"),
-            (F.col("fdist") + F.col("weight")).alias("msg"),
-            F.col("src").alias("via"),
-        )
-        if track_parents:
-            # min over (msg, via): best distance, smallest-id predecessor
-            mins = msgs.groupBy("id").agg(
-                F.min(F.struct("msg", "via")).alias("m")
-            ).select("id", F.col("m.msg").alias("mdist"), F.col("m.via").alias("mvia"))
-        else:
-            mins = msgs.groupBy("id").agg(F.min("msg").alias("mdist"))
-        improved = F.coalesce("mdist", F.lit(_INF)) < F.col("dist")
-        sel = [
-            F.col("id"),
-            F.least("dist", F.coalesce("mdist", F.lit(_INF))).alias("dist"),
-            improved.alias("changed"),
-        ]
-        if track_parents:
-            sel.append(F.when(improved, F.col("mvia")).otherwise(F.col("parent")).alias("parent"))
-        new_state = state.drop("changed").join(mins, "id", "left").select(*sel)
+        frontier = state.filter("changed").select(*scatter)
+        msgs = edges.join(frontier.hint("shuffle_hash"), "src")
+        mins = msgs.groupBy(dst_as_id).agg(gather)
+        new_state = state.join(mins, "id", "left").select(*apply)
         # lazy truncation: the changed-count below is the superstep's one
         # action — it materializes (and caches) the checkpointed state, so
         # each superstep runs as ONE Spark job instead of checkpoint + count

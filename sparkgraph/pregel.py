@@ -68,7 +68,9 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     scans as ``hashpartitioning(id, n)``. Against the ``src``-partitioned
     ``edges_sym`` neither the scatter join nor the apply join then re-exchanges
     the state, so the ``groupBy(dst)`` gather is a superstep's only shuffle.
-    An adaptive plan scans as ``UnknownPartitioning`` instead, and building
+    A plan partitioned on ``id`` or on a bare alias of it (``id AS label``)
+    keeps only the first alternative, the alias, so build such a column
+    some other way (see ``connected_components``). An adaptive plan scans as ``UnknownPartitioning`` instead, and building
     its RDD runs its shuffle stages at call time even when ``eager=False``.
 
     ``eager=True`` materializes now — one Spark job per call. ``eager=False``

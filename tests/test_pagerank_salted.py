@@ -17,3 +17,21 @@ def test_salted_pagerank_equals_plain(spark):
     assert set(plain) == set(salted)
     assert all(math.isclose(plain[v], salted[v], rel_tol=1e-12) for v in plain)
     g.unpersist()
+
+
+def _cached_rdds(spark):
+    """Ids of the persisted RDDs, leaving out the loop's local checkpoints
+    (also persisted RDDs, released when the JVM collects them)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {i for i, r in rdds.items() if not r.rdd().isLocallyCheckpointed()}
+
+
+def test_salted_pagerank_releases_its_hub_table(spark):
+    g = Graph(powerlaw_edges(spark, 3_000, 200), num_partitions=4)
+    # the graph's own cached views are built before the call
+    g.degrees.count()
+    assert g.num_vertices > 0
+    before = _cached_rdds(spark)
+    pagerank(g, iterations=2, salting_threshold=20, salts=4)
+    assert _cached_rdds(spark) == before
+    g.unpersist()

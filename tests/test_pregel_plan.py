@@ -1,23 +1,28 @@
 """Plan shape of the superstep loops: truncated loop state keeps its hash
 partitioning on ``id``, so the ``groupBy`` gather is a superstep's only
-shuffle, and truncation leaves the caller's AQE setting as it found it."""
+shuffle, PageRank's state comes straight out of that gather (its scatter is
+its only join), and truncation leaves the caller's AQE setting as it found
+it."""
 
+import math
 from importlib import import_module
 
 import pytest
 from pyspark.sql import functions as F
 
-from sparkgraph.algorithms import connected_components, pagerank
+from sparkgraph.algorithms import connected_components, pagerank, sssp
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 from sparkgraph.pregel import Checkpointer, truncate_lineage
 
 from tests.fixtures import GRAPH_MAIN
+from tests.oracles import pagerank_oracle
 
 AQE = "spark.sql.adaptive.enabled"
 # the package re-exports the functions under the modules' names
 pagerank_mod = import_module("sparkgraph.algorithms.pagerank")
 components_mod = import_module("sparkgraph.algorithms.components")
+sssp_mod = import_module("sparkgraph.algorithms.sssp")
 pregel_mod = import_module("sparkgraph.pregel")
 
 
@@ -47,6 +52,12 @@ def _exchanges(df):
     ]
 
 
+def _joins(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    names = [n.getClass().getSimpleName() for n in _nodes(plan)]
+    return [n for n in names if n.endswith("JoinExec") or n == "CartesianProductExec"]
+
+
 def _recording(monkeypatch, *modules):
     """Wrap ``truncate_lineage`` in ``modules`` to keep every DataFrame it
     cuts: the first is the initial (or restored) state, then one per
@@ -70,11 +81,57 @@ def test_truncated_state_reports_hash_partitioning_on_id(graph):
 
 
 def test_pagerank_superstep_has_one_exchange_keyed_on_dst(graph, monkeypatch):
-    seen = _recording(monkeypatch, pagerank_mod)
-    pagerank(graph, mode="reference", iterations=1)
+    for kwargs in (
+        {"mode": "reference", "iterations": 1},
+        {"mode": "reference", "iterations": 1, "weighted": True},
+        {"mode": "convergence", "max_iter": 1},
+    ):
+        seen = _recording(monkeypatch, pagerank_mod)
+        pagerank(graph, **kwargs)
+        assert len(seen) == 2, kwargs  # initial state, superstep 1
+        # the scatter is the only join: the new state is the gather's output
+        assert _joins(seen[1]) == ["ShuffledHashJoinExec"], kwargs
+        (exchange,) = _exchanges(seen[1])
+        assert exchange.startswith("hashpartitioning(dst#"), kwargs
+
+
+@pytest.mark.parametrize(
+    "module, run",
+    [
+        (sssp_mod, lambda g: sssp(g, 1, max_iter=1)),
+        (components_mod, lambda g: connected_components(g, max_iter=1)),
+    ],
+    ids=["sssp", "cc"],
+)
+def test_fixpoint_superstep_has_one_exchange(graph, monkeypatch, module, run):
+    # Until the cached edge table is built, its scan reports no partitioning
+    # and the scatter join would shuffle it once; any earlier job on the
+    # graph (its degrees, a PageRank) builds it.
+    graph.edges_sym.count()
+    seen = _recording(monkeypatch, module)
+    run(graph)
     assert len(seen) == 2  # initial state, superstep 1
     (exchange,) = _exchanges(seen[1])
     assert exchange.startswith("hashpartitioning(dst#")
+
+
+@pytest.mark.parametrize("mode", ["reference", "convergence"])
+def test_pagerank_keeps_every_vertex_with_self_loops_and_parallel_edges(spark, mode):
+    """The state is the gather's output, so it relies on every vertex getting
+    a message: parallel edges count once per copy, a self-loop messages its
+    vertex twice (7 has nothing else), and an isolated pair messages each
+    other."""
+    pairs = [(1, 2), (1, 2), (2, 3), (3, 3), (3, 4), (5, 6), (7, 7)]
+    g = Graph(edges_from_pairs(spark, pairs), num_partitions=4)
+    res = pagerank(g, mode=mode, iterations=30, tol=1e-10)
+    got = {r.id: r.value for r in res.state.collect()}
+    assert set(got) == {r.id for r in g.vertices.collect()}
+    if mode == "reference":
+        want = pagerank_oracle(pairs, iterations=30)
+    else:
+        want = pagerank_oracle(pairs, init="uniform", tol=1e-10)
+    assert all(math.isclose(got[v], want[v], abs_tol=1e-9) for v in want)
+    g.unpersist()
 
 
 def test_resumed_superstep_has_one_exchange(graph, monkeypatch, tmp_path):
