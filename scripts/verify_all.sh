@@ -9,13 +9,14 @@ echo "== pytest (split to bound per-run wall time) =="
 python -m pytest tests/test_csr_kernel.py tests/test_csr_frontier.py \
   tests/test_pagerank.py tests/test_sssp_cc.py tests/test_lpa_triangles.py \
   tests/test_resume.py tests/test_property_random_graphs.py \
-  tests/test_pregel_plan.py -q
+  tests/test_pregel_plan.py tests/test_temporal.py tests/test_dag.py -q
 python -m pytest tests/ -q \
   --ignore=tests/test_csr_kernel.py --ignore=tests/test_csr_frontier.py \
   --ignore=tests/test_pagerank.py --ignore=tests/test_sssp_cc.py \
   --ignore=tests/test_lpa_triangles.py --ignore=tests/test_resume.py \
   --ignore=tests/test_property_random_graphs.py \
-  --ignore=tests/test_pregel_plan.py
+  --ignore=tests/test_pregel_plan.py --ignore=tests/test_temporal.py \
+  --ignore=tests/test_dag.py
 
 echo "== oracle gate ($SF) =="
 python scripts/check_oracles.py "$SF"

@@ -17,14 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import (
-    MAX_FIXPOINT_ITERS,
-    Checkpointer,
-    PregelResult,
-    SuperstepLoop,
-    truncate_lineage,
-    warn_unconverged,
-)
+from sparkgraph.pregel import MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop
 
 
 def connected_components(
@@ -42,33 +35,23 @@ def connected_components(
     and an old component's label is a real vertex id inside the (now larger)
     component — new edges only ever merge. New vertices start at their own
     id; stale ids are dropped."""
-    spark = graph.spark
-    edges = graph.edges_sym
     loop = SuperstepLoop("connected_components", {}, checkpointer, resume)
-
-    restored = loop.try_resume(
-        spark, ["id", "component", "changed"], graph.num_partitions
-    )
-    if restored is not None:
-        start_step, state = restored
+    base = graph.vertices
+    if initial_labels is not None:
+        warm = initial_labels.select("id", F.col("component").alias("warm"))
+        base = base.join(warm, "id", "left").select(
+            "id", F.coalesce("warm", F.col("id")).alias("component")
+        )
     else:
-        start_step = 0
-        base = graph.vertices
-        if initial_labels is not None:
-            warm = initial_labels.select("id", F.col("component").alias("warm"))
-            base = base.join(warm, "id", "left").select(
-                "id", F.coalesce("warm", F.col("id")).alias("component")
-            )
-        else:
-            # not a bare alias: with `id AS component` the plan is partitioned
-            # on `component` or `id`, the checkpoint keeps only the first, and
-            # every superstep's joins would re-exchange the state
-            base = base.select("id", F.least("id", "id").alias("component"))
-        state = truncate_lineage(base.withColumn("changed", F.lit(True)))
+        # not a bare alias: with `id AS component` the plan is partitioned
+        # on `component` or `id`, the checkpoint keeps only the first, and
+        # every superstep's joins would re-exchange the state
+        base = base.select("id", F.least("id", "id").alias("component"))
+    init = base.withColumn("changed", F.lit(True))
+    step, state = loop.start(init, graph.num_partitions)
 
     # The loop body's Columns are built once: each one is a Py4J round trip.
     scatter = [F.col("id").alias("src"), F.col("component").alias("flabel")]
-    dst_as_id = F.col("dst").alias("id")
     gather = F.min("flabel").alias("mlabel")
     best = F.coalesce("mlabel", F.col("component"))
     apply = [
@@ -77,25 +60,7 @@ def connected_components(
         (best < F.col("component")).alias("changed"),
     ]
 
-    step = start_step
-    converged = False
-    while step < max_iter:
-        loop.step_started()
-        frontier = state.filter("changed").select(*scatter)
-        msgs = edges.join(frontier.hint("shuffle_hash"), "src")
-        mins = msgs.groupBy(dst_as_id).agg(gather)
-        new_state = state.join(mins, "id", "left").select(*apply)
-        # lazy truncation: the changed-count is the superstep's single action
-        # (materializes the checkpoint as a side effect — one job, not two)
-        new_state = truncate_lineage(new_state, eager=False)
-        changed = new_state.filter("changed").count()
-        step += 1
-        state = new_state
-        loop.step_done(state, step, changed=changed)
-        if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        warn_unconverged("connected_components", step, max_iter)
+    state, step, converged = loop.relax(
+        graph.edges_sym, state, step, max_iter, scatter, gather, apply
+    )
     return loop.finish(state, step, converged, result=state.select("id", "component"))

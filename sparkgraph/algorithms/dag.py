@@ -29,7 +29,6 @@ from sparkgraph.pregel import (
     PregelResult,
     SuperstepLoop,
     truncate_lineage,
-    warn_unconverged,
 )
 
 
@@ -52,47 +51,30 @@ def longest_path_layers(
         .distinct()
     )
     loop = SuperstepLoop("dag_layers", {})
-    state = truncate_lineage(
-        verts.select("id", F.lit(0).cast("long").alias("layer"), F.lit(True).alias("changed"))
+    step, state = loop.start(
+        verts.select("id", F.lit(0).cast("long").alias("layer"), F.lit(True).alias("changed")),
+        int(e.sparkSession.conf.get("spark.sql.shuffle.partitions")),
     )
     n_verts = state.count()
     cycle_bound = max(n_verts - 1, 1)
 
-    step = 0
-    converged = False
-    while step < min(max_iter, cycle_bound + 1):
-        loop.step_started()
-        frontier = state.filter("changed").select(
-            F.col("id").alias("src"), F.col("layer").alias("flayer")
+    scatter = [F.col("id").alias("src"), F.col("layer").alias("flayer")]
+    gather = F.max(F.col("flayer") + F.lit(1)).alias("mlayer")
+    best = F.coalesce("mlayer", F.lit(-1))
+    apply = [
+        "id",
+        F.greatest("layer", best).alias("layer"),
+        (best > F.col("layer")).alias("changed"),
+    ]
+    state, step, converged = loop.relax(
+        e, state, step, min(max_iter, cycle_bound + 1), scatter, gather, apply
+    )
+    if not converged and max_iter > cycle_bound:
+        raise ValueError(
+            f"longest_path_layers: still relaxing after {step} supersteps "
+            f"on {n_verts} vertices — the input has a directed cycle; "
+            "collapse it first (algorithms.scc.condensation)"
         )
-        msgs = e.join(frontier.hint("shuffle_hash"), "src").select(
-            F.col("dst").alias("id"), (F.col("flayer") + F.lit(1)).alias("msg")
-        )
-        maxs = msgs.groupBy("id").agg(F.max("msg").alias("mlayer"))
-        improved = F.coalesce("mlayer", F.lit(-1)) > F.col("layer")
-        new_state = state.drop("changed").join(maxs, "id", "left").select(
-            "id",
-            F.greatest("layer", F.coalesce("mlayer", F.lit(-1))).alias("layer"),
-            improved.alias("changed"),
-        )
-        # lazy: the changed-count materializes the checkpoint (one job)
-        new_state = truncate_lineage(new_state, eager=False)
-        changed = new_state.filter("changed").count()
-        step += 1
-        state = new_state
-        loop.step_done(state, step, changed=changed)
-        if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        if max_iter > cycle_bound:
-            raise ValueError(
-                f"longest_path_layers: still relaxing after {step} supersteps "
-                f"on {n_verts} vertices — the input has a directed cycle; "
-                "collapse it first (algorithms.scc.condensation)"
-            )
-        warn_unconverged("dag_layers", step, max_iter)
     return loop.finish(state, step, converged, result=state.select("id", "layer"))
 
 

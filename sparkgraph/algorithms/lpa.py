@@ -39,18 +39,13 @@ def label_propagation(
     did once). Determinism note: weight sums compare exactly when weights
     are integer-valued (exact in doubles); with arbitrary floats, near-tied
     votes can flip on summation order — prefer integer-valued weights."""
-    spark = graph.spark
     edges = graph.edges_sym
     loop = SuperstepLoop("label_propagation", {"max_iter": max_iter}, checkpointer, resume)
+    # not a bare alias (see connected_components): the state stays
+    # partitioned on id, so superstep 1 does not re-exchange it
+    init = graph.vertices.select("id", F.least("id", "id").alias("label"))
+    step, state = loop.start(init, graph.num_partitions)
 
-    restored = loop.try_resume(spark, ["id", "label"], graph.num_partitions)
-    if restored is not None:
-        start_step, state = restored
-    else:
-        start_step = 0
-        state = truncate_lineage(graph.vertices.select("id", F.col("id").alias("label")))
-
-    step = start_step
     while step < max_iter:
         loop.step_started()
         src_labels = state.select(F.col("id").alias("src"), "label")

@@ -77,7 +77,6 @@ def pagerank(
     dropped."""
     if mode not in ("reference", "convergence"):
         raise ValueError(f"unknown mode {mode!r}")
-    spark = graph.spark
     n = graph.num_vertices
     if n == 0:
         raise ValueError("graph has no vertices (empty or comment-only input)")
@@ -98,28 +97,21 @@ def pagerank(
     )
 
     init_value = 0.0 if mode == "reference" else 1.0 / n
-    restored = loop.try_resume(spark, ["id", "deg", "value"], graph.num_partitions)
-    if restored is not None:
-        start_step, state = restored
+    base = (
+        graph.weighted_degrees.withColumnRenamed("wdeg", "deg")
+        if weighted
+        else graph.degrees
+    )
+    if initial_state is not None:
+        warm = initial_state.select("id", F.col("value").alias("warm"))
+        base = base.join(warm, "id", "left")
+        value_col = F.coalesce("warm", F.lit(init_value))
     else:
-        start_step = 0
-        base = (
-            graph.weighted_degrees.withColumnRenamed("wdeg", "deg")
-            if weighted
-            else graph.degrees
-        )
-        if initial_state is not None:
-            warm = initial_state.select("id", F.col("value").alias("warm"))
-            base = base.join(warm, "id", "left")
-            value_col = F.coalesce("warm", F.lit(init_value))
-        else:
-            value_col = F.lit(init_value)
-        state = truncate_lineage(
-            base.select(
-                "id", F.col("deg").cast("double").alias("deg"),
-                value_col.alias("value"),
-            )
-        )
+        value_col = F.lit(init_value)
+    init = base.select(
+        "id", F.col("deg").cast("double").alias("deg"), value_col.alias("value")
+    )
+    step, state = loop.start(init, graph.num_partitions)
 
     # The loop body's Columns are built once: each one is a Py4J round trip.
     # Scatter (A5): contribution value/deg along every symmetrized edge.
@@ -139,7 +131,6 @@ def pagerank(
     max_delta = F.max(F.abs(F.col("value") - F.col("prev")))
 
     hubs = None
-    step = start_step
     converged = False
     try:
         if salting_threshold is not None:

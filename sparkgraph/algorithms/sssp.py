@@ -21,14 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import (
-    MAX_FIXPOINT_ITERS,
-    Checkpointer,
-    PregelResult,
-    SuperstepLoop,
-    truncate_lineage,
-    warn_unconverged,
-)
+from sparkgraph.pregel import MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop
 
 _INF = float("inf")
 
@@ -48,30 +41,20 @@ def sssp(
     when its distance strictly improves, to the smallest-id predecessor among
     that superstep's best proposals (min over the (dist, src) pair); the
     source and unreachable vertices carry NULL."""
-    spark = graph.spark
-    edges = graph.edges_sym
     loop = SuperstepLoop("sssp", {"source": source}, checkpointer, resume)
-
-    state_cols = ["id", "dist", "changed"] + (["parent"] if track_parents else [])
-    restored = loop.try_resume(spark, state_cols, graph.num_partitions)
-    if restored is not None:
-        start_step, state = restored
-    else:
-        start_step = 0
-        init = graph.vertices.select(
-            "id",
-            F.when(F.col("id") == source, 0.0).otherwise(F.lit(_INF)).alias("dist"),
-            (F.col("id") == source).alias("changed"),
-        )
-        if track_parents:
-            init = init.withColumn("parent", F.lit(None).cast("long"))
-        state = truncate_lineage(init)
+    init = graph.vertices.select(
+        "id",
+        F.when(F.col("id") == source, 0.0).otherwise(F.lit(_INF)).alias("dist"),
+        (F.col("id") == source).alias("changed"),
+    )
+    if track_parents:
+        init = init.withColumn("parent", F.lit(None).cast("long"))
+    step, state = loop.start(init, graph.num_partitions)
 
     # The loop body's Columns are built once: each one is a Py4J round trip.
     scatter = [F.col("id").alias("src"), F.col("dist").alias("fdist")]
     # Scatter from the frontier only: propose dist + weight to neighbors.
     proposal = F.col("fdist") + F.col("weight")
-    dst_as_id = F.col("dst").alias("id")
     if track_parents:
         # min over (msg, via): best distance, smallest-id predecessor
         gather = F.min(
@@ -93,27 +76,8 @@ def sssp(
             F.when(improved, F.col("m.via")).otherwise(F.col("parent")).alias("parent")
         )
 
-    step = start_step
-    converged = False
-    while step < max_iter:
-        loop.step_started()
-        frontier = state.filter("changed").select(*scatter)
-        msgs = edges.join(frontier.hint("shuffle_hash"), "src")
-        mins = msgs.groupBy(dst_as_id).agg(gather)
-        new_state = state.join(mins, "id", "left").select(*apply)
-        # lazy truncation: the changed-count below is the superstep's one
-        # action — it materializes (and caches) the checkpointed state, so
-        # each superstep runs as ONE Spark job instead of checkpoint + count
-        new_state = truncate_lineage(new_state, eager=False)
-        changed = new_state.filter("changed").count()
-        step += 1
-        state = new_state
-        loop.step_done(state, step, changed=changed)
-        if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        warn_unconverged("sssp", step, max_iter)
+    state, step, converged = loop.relax(
+        graph.edges_sym, state, step, max_iter, scatter, gather, apply
+    )
     result_cols = ["id", "dist"] + (["parent"] if track_parents else [])
     return loop.finish(state, step, converged, result=state.select(*result_cols))

@@ -28,14 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkgraph.pregel import (
-    MAX_FIXPOINT_ITERS,
-    Checkpointer,
-    PregelResult,
-    SuperstepLoop,
-    truncate_lineage,
-    warn_unconverged,
-)
+from sparkgraph.pregel import MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop
 
 _INF = float("inf")
 
@@ -62,73 +55,47 @@ def temporal_earliest_arrival(
         raise ValueError("temporal_earliest_arrival needs >= 1 source")
     spark = edges.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select("src", "dst", F.col("ts").cast("double"))
-        .repartition(n_parts, F.col("src"))
-        .persist()
-    )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
     loop = SuperstepLoop(
         "temporal_earliest_arrival",
         {"sources": sorted(sources), "t_start": t_start, "strict": strict},
         checkpointer,
         resume,
     )
-
-    restored = loop.try_resume(spark, ["id", "arrival", "changed"], n_parts)
-    if restored is not None:
-        start_step, state = restored
-    else:
-        start_step = 0
+    e = (
+        edges.select("src", "dst", F.col("ts").cast("double"))
+        .repartition(n_parts, F.col("src"))
+        .persist()
+    )
+    try:
+        verts = (
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
+        )
         is_src = F.col("id").isin([int(s) for s in sources])
-        state = truncate_lineage(
-            verts.select(
-                "id",
-                F.when(is_src, float(t_start)).otherwise(F.lit(_INF)).alias("arrival"),
-                is_src.alias("changed"),
-            )
+        init = verts.select(
+            "id",
+            F.when(is_src, float(t_start)).otherwise(F.lit(_INF)).alias("arrival"),
+            is_src.alias("changed"),
         )
+        step, state = loop.start(init, n_parts)
 
-    usable = F.col("ts") > F.col("fa") if strict else F.col("ts") >= F.col("fa")
-    step = start_step
-    converged = False
-    while step < max_iter:
-        loop.step_started()
-        frontier = state.filter("changed").select(
-            F.col("id").alias("src"), F.col("arrival").alias("fa")
+        scatter = [F.col("id").alias("src"), F.col("arrival").alias("fa")]
+        usable = F.col("ts") > F.col("fa") if strict else F.col("ts") >= F.col("fa")
+        # min skips the NULLs of unusable edges: a vertex reached by none of
+        # them gets NULL, the same as no message at all
+        gather = F.min(F.when(usable, F.col("ts"))).alias("ma")
+        best = F.coalesce("ma", F.lit(_INF))
+        apply = [
+            "id",
+            F.least("arrival", best).alias("arrival"),
+            (best < F.col("arrival")).alias("changed"),
+        ]
+        state, step, converged = loop.relax(
+            e, state, step, max_iter, scatter, gather, apply
         )
-        msgs = (
-            e.join(frontier.hint("shuffle_hash"), "src")
-            .filter(usable)
-            .select(F.col("dst").alias("id"), F.col("ts").alias("msg"))
-        )
-        mins = msgs.groupBy("id").agg(F.min("msg").alias("ma"))
-        improved = F.coalesce("ma", F.lit(_INF)) < F.col("arrival")
-        new_state = truncate_lineage(
-            state.drop("changed")
-            .join(mins, "id", "left")
-            .select(
-                "id",
-                F.least("arrival", F.coalesce("ma", F.lit(_INF))).alias("arrival"),
-                improved.alias("changed"),
-            ),
-            eager=False,  # the changed-count below materializes it: one job
-        )
-        changed = new_state.filter("changed").count()
-        step += 1
-        state = new_state
-        loop.step_done(state, step, changed=changed)
-        if changed == 0:
-            converged = True
-            break
-
-    if not converged:
-        warn_unconverged("temporal_earliest_arrival", step, max_iter)
-    e.unpersist()
+    finally:
+        e.unpersist()
     return loop.finish(
         state, step, converged, result=state.select("id", "arrival")
     )

@@ -1,4 +1,5 @@
-"""Superstep driver utilities: lineage truncation, metrics, checkpoint/resume.
+"""Superstep driver: lineage truncation, metrics, checkpoint/resume and the
+frontier fixpoint loop.
 
 Replaces the reference's hand-rolled BSP runtime (SURVEY.md §2A A9/A10, §2B
 B7/B8): the master's ACK-counted barrier (master/master.go:404-450) becomes a
@@ -8,6 +9,13 @@ superstep-0 fault story (master/master.go:431-445) is upgraded to
 resume-from-last-completed-superstep via Parquet state checkpoints with a
 JSON manifest carrying per-partition lineage and convergence metrics
 (BASELINE.json north_star).
+
+The reference writes its vertex programs against one ``Vertex`` API
+(api/api.go:9-22). Here ``SuperstepLoop.start`` is the one resume-or-init
+step of every checkpointable loop, and ``SuperstepLoop.relax`` is the one
+frontier fixpoint (the shape of GraphX ``aggregateMessages``): SSSP, CC,
+temporal reachability and DAG layering supply only their scatter, gather
+and apply ``Column``s.
 """
 
 from __future__ import annotations
@@ -18,7 +26,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MANIFEST_NAME = "_manifest.json"
@@ -115,7 +123,6 @@ def partition_lineage(df: DataFrame, cols: list[str]) -> list[dict]:
 class SuperstepMetrics:
     superstep: int
     seconds: float
-    messages: int | None = None
     changed: int | None = None
     delta: float | None = None
 
@@ -202,9 +209,11 @@ class Checkpointer:
 
 class SuperstepLoop:
     """Bookkeeping shared by all iterative algorithms: wall-clock per
-    superstep, optional convergence deltas, checkpoint writes and resume.
-    The per-algorithm scatter/gather/apply logic stays in
-    ``sparkgraph.algorithms`` — this only owns the loop mechanics (A9/A10).
+    superstep, optional convergence deltas, checkpoint writes and resume
+    (A9/A10). ``start`` resumes or initializes a loop's state; ``relax`` runs
+    the frontier fixpoint for min/max-relaxation loops. Loops of another
+    shape (PageRank's fused gather, LPA's two-level vote, the multi-consumer
+    loops) keep their own superstep and call ``step_started``/``step_done``.
     """
 
     def __init__(
@@ -222,23 +231,21 @@ class SuperstepLoop:
         self._t0 = time.monotonic()
         self._last_saved: int | None = None
 
-    def try_resume(
-        self, spark, columns: list[str], num_partitions: int
-    ) -> tuple[int, DataFrame] | None:
-        """(superstep, state) of the newest checkpoint, or None. The state is
-        the checkpoint's ``columns``, hash-partitioned on ``id`` into
-        ``num_partitions`` inside its lineage truncation, so the first
-        superstep after a resume shuffles only its gather, like any other.
+    def start(self, init: DataFrame, num_partitions: int) -> tuple[int, DataFrame]:
+        """(superstep, state) the loop starts from: the newest checkpoint when
+        resuming and one exists, else ``(0, init)``. Either way the state is
+        lineage-truncated. A restored state takes ``init``'s columns and is
+        hash-partitioned on ``id`` into ``num_partitions`` inside its
+        truncation, so the first superstep after a resume shuffles only its
+        gather, like any other.
 
         Raises ``ValueError`` when that checkpoint was written by another
         algorithm or with other parameters (halting bounds aside, so a run
         may resume to a larger ``iterations``). The check reads only the
         manifest."""
-        if not (self.resume and self.checkpointer):
-            return None
-        found = self.checkpointer.latest()
+        found = self.checkpointer.latest() if self.resume and self.checkpointer else None
         if found is None:
-            return None
+            return 0, truncate_lineage(init)
         manifest = found[2]
         if manifest["algorithm"] != self.algorithm:
             raise ValueError(
@@ -259,13 +266,44 @@ class SuperstepLoop:
                     f"{k} ({recorded.get(k)!r} != {current.get(k)!r})" for k in differ
                 )
             )
-        restored = self.checkpointer.restore(spark)
-        if restored is None:
-            return None
-        superstep, state, metrics = restored
-        self.metrics = metrics
-        state = state.select(*columns).repartition(num_partitions, "id")
+        superstep, state, self.metrics = self.checkpointer.restore(init.sparkSession)
+        state = state.select(*init.columns).repartition(num_partitions, "id")
         return superstep, truncate_lineage(state)
+
+    def relax(
+        self, edges: DataFrame, state: DataFrame, step: int, max_iter: int,
+        scatter: list, gather: Column, apply: list,
+    ) -> tuple[DataFrame, int, bool]:
+        """Frontier fixpoint from ``step`` up to ``max_iter`` supersteps:
+        (state, supersteps, converged). ``state`` has ``id`` and a boolean
+        ``changed``; ``edges`` is partitioned on ``src``.
+
+        Each superstep, the vertices that changed last superstep select
+        ``scatter`` (naming ``src``) and join ``edges`` on ``src``; ``gather``
+        aggregates the joined rows by ``dst`` into one column per receiving
+        ``id``; ``apply`` selects the new state, ``changed`` included, from
+        the state left-joined with that aggregate (NULL where no message
+        arrived). The loop halts when nothing changed.
+
+        The truncation is lazy: the changed count is the superstep's one
+        action and materializes the checkpoint, so a superstep is one Spark
+        job, and the ``groupBy(dst)`` gather is its only shuffle."""
+        dst_as_id = F.col("dst").alias("id")
+        while step < max_iter:
+            self.step_started()
+            frontier = state.filter("changed").select(*scatter)
+            msgs = edges.join(frontier.hint("shuffle_hash"), "src")
+            gathered = msgs.groupBy(dst_as_id).agg(gather)
+            state = truncate_lineage(
+                state.join(gathered, "id", "left").select(*apply), eager=False
+            )
+            changed = state.filter("changed").count()
+            step += 1
+            self.step_done(state, step, changed=changed)
+            if changed == 0:
+                return state, step, True
+        warn_unconverged(self.algorithm, step, max_iter)
+        return state, step, False
 
     def step_started(self) -> None:
         self._t0 = time.monotonic()
@@ -276,13 +314,11 @@ class SuperstepLoop:
         superstep: int,
         changed: int | None = None,
         delta: float | None = None,
-        messages: int | None = None,
     ) -> None:
         self.metrics.append(
             SuperstepMetrics(
                 superstep=superstep,
                 seconds=round(time.monotonic() - self._t0, 6),
-                messages=messages,
                 changed=changed,
                 delta=delta,
             )

@@ -2,7 +2,8 @@
 partitioning on ``id``, so the ``groupBy`` gather is a superstep's only
 shuffle, PageRank's state comes straight out of that gather (its scatter is
 its only join), and truncation leaves the caller's AQE setting as it found
-it."""
+it. ``SuperstepLoop.start`` and ``SuperstepLoop.relax`` truncate inside
+``sparkgraph.pregel``, so the plans are recorded there."""
 
 import math
 from importlib import import_module
@@ -10,7 +11,9 @@ from importlib import import_module
 import pytest
 from pyspark.sql import functions as F
 
-from sparkgraph.algorithms import connected_components, pagerank, sssp
+from sparkgraph.algorithms import connected_components, label_propagation, pagerank, sssp
+from sparkgraph.algorithms.dag import longest_path_layers
+from sparkgraph.algorithms.temporal import temporal_earliest_arrival
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 from sparkgraph.pregel import Checkpointer, truncate_lineage
@@ -21,8 +24,7 @@ from tests.oracles import pagerank_oracle
 AQE = "spark.sql.adaptive.enabled"
 # the package re-exports the functions under the modules' names
 pagerank_mod = import_module("sparkgraph.algorithms.pagerank")
-components_mod = import_module("sparkgraph.algorithms.components")
-sssp_mod = import_module("sparkgraph.algorithms.sssp")
+lpa_mod = import_module("sparkgraph.algorithms.lpa")
 pregel_mod = import_module("sparkgraph.pregel")
 
 
@@ -86,7 +88,7 @@ def test_pagerank_superstep_has_one_exchange_keyed_on_dst(graph, monkeypatch):
         {"mode": "reference", "iterations": 1, "weighted": True},
         {"mode": "convergence", "max_iter": 1},
     ):
-        seen = _recording(monkeypatch, pagerank_mod)
+        seen = _recording(monkeypatch, pregel_mod, pagerank_mod)
         pagerank(graph, **kwargs)
         assert len(seen) == 2, kwargs  # initial state, superstep 1
         # the scatter is the only join: the new state is the gather's output
@@ -95,24 +97,46 @@ def test_pagerank_superstep_has_one_exchange_keyed_on_dst(graph, monkeypatch):
         assert exchange.startswith("hashpartitioning(dst#"), kwargs
 
 
+def _temporal(g):
+    ts = g.edges.select("src", "dst", F.col("weight").alias("ts"))
+    return temporal_earliest_arrival(ts, [1], max_iter=1)
+
+
+def _dag(g):
+    return longest_path_layers(g.edges.filter(F.col("src") < F.col("dst")), max_iter=1)
+
+
 @pytest.mark.parametrize(
-    "module, run",
+    "run",
     [
-        (sssp_mod, lambda g: sssp(g, 1, max_iter=1)),
-        (components_mod, lambda g: connected_components(g, max_iter=1)),
+        lambda g: sssp(g, 1, max_iter=1),
+        lambda g: connected_components(g, max_iter=1),
+        _temporal,
+        _dag,
     ],
-    ids=["sssp", "cc"],
+    ids=["sssp", "cc", "temporal", "dag"],
 )
-def test_fixpoint_superstep_has_one_exchange(graph, monkeypatch, module, run):
+def test_fixpoint_superstep_has_one_exchange(graph, monkeypatch, run):
     # Until the cached edge table is built, its scan reports no partitioning
     # and the scatter join would shuffle it once; any earlier job on the
     # graph (its degrees, a PageRank) builds it.
     graph.edges_sym.count()
-    seen = _recording(monkeypatch, module)
+    seen = _recording(monkeypatch, pregel_mod)
     run(graph)
     assert len(seen) == 2  # initial state, superstep 1
     (exchange,) = _exchanges(seen[1])
     assert exchange.startswith("hashpartitioning(dst#")
+
+
+def test_lpa_first_superstep_exchanges_only_its_gathers(graph, monkeypatch):
+    # the initial label is not a bare alias of id, so the truncated state
+    # stays partitioned on id and neither join re-exchanges it
+    graph.edges_sym.count()
+    seen = _recording(monkeypatch, pregel_mod, lpa_mod)
+    label_propagation(graph, max_iter=1)
+    assert len(seen) == 2  # initial state, superstep 1
+    gathers = _exchanges(seen[1])  # groupBy(dst, label), then groupBy(id)
+    assert len(gathers) == 2, gathers
 
 
 @pytest.mark.parametrize("mode", ["reference", "convergence"])
@@ -137,7 +161,7 @@ def test_pagerank_keeps_every_vertex_with_self_loops_and_parallel_edges(spark, m
 def test_resumed_superstep_has_one_exchange(graph, monkeypatch, tmp_path):
     ckdir = str(tmp_path / "cc")
     connected_components(graph, max_iter=1, checkpointer=Checkpointer(ckdir, every=1))
-    seen = _recording(monkeypatch, pregel_mod, components_mod)
+    seen = _recording(monkeypatch, pregel_mod)
     res = connected_components(graph, checkpointer=Checkpointer(ckdir, every=1), resume=True)
     assert res.converged
     # the restored Parquet state is hash-partitioned inside its truncation …

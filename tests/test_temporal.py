@@ -2,7 +2,12 @@
 
 import random
 
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
+
 from sparkgraph.algorithms.temporal import temporal_earliest_arrival
+from sparkgraph.pregel import Checkpointer
 
 INF = float("inf")
 
@@ -79,8 +84,24 @@ def test_earliest_beats_hop_count(spark):
 
 
 def test_empty_sources_raise(spark):
-    import pytest
-
     df = spark.createDataFrame([(1, 2, 1.0)], "src long, dst long, ts double")
     with pytest.raises(ValueError):
         temporal_earliest_arrival(df, [])
+
+
+def test_refused_resume_releases_its_edge_table(spark, tmp_path):
+    df = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 2.0), (3, 4, 2.0)], "src long, dst long, ts double"
+    )
+    ckdir = str(tmp_path / "temporal")
+    temporal_earliest_arrival(df, [1], checkpointer=Checkpointer(ckdir, every=1))
+    # the table the loop persists: its plan is found again by sameResult
+    e = df.select("src", "dst", F.col("ts").cast("double")).repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), F.col("src")
+    )
+    assert e.storageLevel == StorageLevel.NONE
+    with pytest.raises(ValueError, match="strict"):
+        temporal_earliest_arrival(
+            df, [1], strict=True, checkpointer=Checkpointer(ckdir, every=1), resume=True
+        )
+    assert e.storageLevel == StorageLevel.NONE
