@@ -40,7 +40,7 @@ _ = g.degrees.count()
 out = {{"cores": cores, "sym_edges": n_sym}}
 for name, fn in [
     ("relational", lambda: pagerank(g, mode="reference", iterations={iters})),
-    ("csr", lambda: pagerank_csr(g, mode="reference", iterations={iters}, combine={combine!r})),
+    ("csr", lambda: pagerank_csr(g, mode="reference", iterations={iters})),
 ]:
     t0 = time.monotonic()
     res = fn()
@@ -60,8 +60,8 @@ print("RESULT " + json.dumps(out))
 """
 
 
-def run_level(cores: int, edges: int, verts: int, iters: int, combine: str = "auto") -> dict:
-    code = _CHILD.format(repo=REPO, cores=cores, edges=edges, verts=verts, iters=iters, combine=combine)
+def run_level(cores: int, edges: int, verts: int, iters: int) -> dict:
+    code = _CHILD.format(repo=REPO, cores=cores, edges=edges, verts=verts, iters=iters)
     env = dict(os.environ)
     # heap sized to the data (min 6g): the child runs two kernels in one
     # session (relational + CSR), and the checkpoint/broadcast residue of the
@@ -85,11 +85,10 @@ def main() -> None:
     ap.add_argument("--verts", type=int, default=1_000_000)
     ap.add_argument("--iters", type=int, default=10)
     ap.add_argument("--repeat", type=int, default=1)
-    ap.add_argument("--csr-combine", default="auto", choices=["auto", "driver", "shuffle"])
     args = ap.parse_args()
 
     def best(cores: int) -> dict:
-        runs = [run_level(cores, args.edges, args.verts, args.iters, args.csr_combine) for _ in range(args.repeat)]
+        runs = [run_level(cores, args.edges, args.verts, args.iters) for _ in range(args.repeat)]
         return min(runs, key=lambda r: r["relational"]["seconds"] + r["csr"]["seconds"])
 
     low, high = best(args.n), best(4 * args.n)

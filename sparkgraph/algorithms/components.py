@@ -17,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop
+from sparkgraph.pregel import (
+    MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop, warn_unconverged,
+)
 
 
 def connected_components(
@@ -63,4 +65,6 @@ def connected_components(
     state, step, converged = loop.relax(
         graph.edges_sym, state, step, max_iter, scatter, gather, apply
     )
+    if not converged:
+        warn_unconverged(loop.algorithm, step, max_iter)
     return loop.finish(state, step, converged, result=state.select("id", "component"))

@@ -29,6 +29,7 @@ from sparkgraph.pregel import (
     PregelResult,
     SuperstepLoop,
     truncate_lineage,
+    warn_unconverged,
 )
 
 
@@ -75,6 +76,8 @@ def longest_path_layers(
             f"on {n_verts} vertices — the input has a directed cycle; "
             "collapse it first (algorithms.scc.condensation)"
         )
+    if not converged:
+        warn_unconverged(loop.algorithm, step, max_iter)
     return loop.finish(state, step, converged, result=state.select("id", "layer"))
 
 

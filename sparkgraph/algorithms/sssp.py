@@ -21,7 +21,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop
+from sparkgraph.pregel import (
+    MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop, warn_unconverged,
+)
 
 _INF = float("inf")
 
@@ -79,5 +81,7 @@ def sssp(
     state, step, converged = loop.relax(
         graph.edges_sym, state, step, max_iter, scatter, gather, apply
     )
+    if not converged:
+        warn_unconverged(loop.algorithm, step, max_iter)
     result_cols = ["id", "dist"] + (["parent"] if track_parents else [])
     return loop.finish(state, step, converged, result=state.select(*result_cols))

@@ -28,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparkgraph.pregel import MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop
+from sparkgraph.pregel import (
+    MAX_FIXPOINT_ITERS, Checkpointer, PregelResult, SuperstepLoop, warn_unconverged,
+)
 
 _INF = float("inf")
 
@@ -94,6 +96,8 @@ def temporal_earliest_arrival(
         state, step, converged = loop.relax(
             e, state, step, max_iter, scatter, gather, apply
         )
+        if not converged:
+            warn_unconverged(loop.algorithm, step, max_iter)
     finally:
         e.unpersist()
     return loop.finish(

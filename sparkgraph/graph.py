@@ -133,8 +133,9 @@ class Graph:
         for df in (self._edges_sym, self._vertices, self._degrees):
             if df is not None:
                 df.unpersist()
-        # release any session-cached CSR packs built over this graph
-        for pg in self.__dict__.pop("_csr_pack_cache", {}).values():
+        # release the session-cached CSR pack built over this graph, if any
+        pg = self.__dict__.pop("_csr_pack_cache", None)
+        if pg is not None:
             pg.unpersist()
 
 

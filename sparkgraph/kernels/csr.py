@@ -1,50 +1,51 @@
-"""CSR-packed Arrow gather-scatter kernel (reference operator A4's CSR variant,
-BASELINE.json north_star: "vectorized Arrow UDFs over CSR-packed edge
-partitions ... a hash-partitioned edge table joined to a broadcast-or-shuffled
-vertex-state table").
+"""CSR-packed Arrow gather-scatter kernels (reference operator A4's CSR
+variant, BASELINE.json north_star: "vectorized Arrow UDFs over CSR-packed
+edge partitions ... a hash-partitioned edge table joined to a
+broadcast-or-shuffled vertex-state table").
 
-Strategy: pack each hash partition of the symmetrized edge table ONCE into
-dense numpy index arrays (the per-partition CSR the reference builds as Go
-maps, worker/worker.go:152-212), persist the packed form, then run each
-superstep as a single ``mapInArrow`` pass that:
+Strategy: pack each partition of the symmetrized edge table ONCE into dense
+numpy index arrays (the per-partition CSR the reference builds as Go maps,
+worker/worker.go:152-212) and persist it. Every superstep of
+``pagerank_csr``, ``sssp_csr`` and ``cc_csr`` is one ``_gather``: broadcast
+the dense vertex state, run one ``mapInArrow`` pass in which the kernel's
+vectorized ``message`` turns each pack row into ``(dst_idx, value)`` pairs
+(PageRank ``contrib[src]``; SSSP/CC ``value[src] (+ w)`` from frontier
+sources), and combine each task's pairs into ONE partial (``np.bincount`` /
+``np.minimum.at`` — the reference's per-VM combiner, worker.go:269-284).
+The vertex count picks the merge: up to ``DRIVER_COMBINE_MAX_VERTICES`` the
+driver sum/min-merges per-task PACKED BLOBS (one binary row per task, read
+through few enough tasks to collect ≤ ~4M entries a superstep); above it a
+``groupBy(idx)`` merges the partials of every pack partition. The kernel
+applies its update on the dense gathered vector and rebroadcasts.
 
-  1. reads the broadcast vertex-value vector (numpy float64, one slot per
-     dense vertex index),
-  2. computes all contributions vectorized (``values[src]/deg[src]``),
-  3. pre-aggregates per destination inside the partition with ``np.bincount``
-     (map-side combine — the reference's per-VM combiner, worker.go:269-284),
-  4. emits only the touched (dst_idx, partial_sum) pairs.
-
-The partials reach the driver as per-partition PACKED BLOBS (one binary row
-per partition: int64 idx array + float64 value array), never as per-vertex
-Arrow rows — the driver merges ≤ `parts` blobs with ``np.add.at`` /
-``np.minimum.at``, applies the damped update on the dense vector, and
-rebroadcasts. In ``combine="shuffle"`` mode the per-dst sum itself stays
-distributed (groupBy before packing), so the driver's work is a single
-assignment scatter over ≤ V unique indices.
-
-Scale envelope — this is a FAST PATH, not the scale path: the kernel
-materializes the dense state vector on the driver and broadcasts it each
-superstep, so its contract is graphs up to 10⁷ vertices (80 MB vector — the
-measured-safe bound on this class of driver; the constructor raises beyond
+Scale envelope — this is a FAST PATH, not the scale path: the kernels
+materialize the dense state vector on the driver and broadcast it each
+superstep, so their contract is graphs up to 10⁷ vertices (80 MB vector — the
+measured-safe bound on this class of driver; ``packed_graph`` raises beyond
 it, callers may consciously raise the limit to ~10⁸/800 MB where their
-driver allows). The relational engine (sparkgraph.algorithms.pagerank) is
-the 100 TB path: state never leaves the cluster, and it is what the CLI and
-gate use by default. Both produce identical results (tested to 1e-12).
+driver allows). The relational engine (sparkgraph.algorithms) is the 100 TB
+path: state never leaves the cluster, and it is what the CLI and gate use by
+default. Both produce identical results (tested to 1e-12).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import time
+from collections.abc import Callable, Iterator
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
 from sparkgraph.pregel import MAX_FIXPOINT_ITERS, PregelResult, SuperstepMetrics, warn_unconverged
 
-import time
+PACK_EDGES_PER_PARTITION = 500_000
+# driver merge up to this many vertices, groupBy merge above
+DRIVER_COMBINE_MAX_VERTICES = 2_000_000
+# (idx, value) entries one driver-merged superstep collects at most
+_DRIVER_COMBINE_ENTRIES = 4_000_000
 
 
 def _pack_partitions(edges_sym, ids: np.ndarray):
@@ -76,105 +77,136 @@ def _pack_partitions(edges_sym, ids: np.ndarray):
     )
 
 
-_BLOB_SCHEMA = "idx_b binary, val_b binary"
+def _column(batch: pa.RecordBatch, name: str, dtype) -> np.ndarray:
+    return np.frombuffer(batch.column(name)[0].as_py(), dtype=dtype)
 
 
 def _blob_batch(idx: np.ndarray, vals: np.ndarray):
+    """int64 indices + float64 values → ONE (idx_b, val_b) binary row."""
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array([idx.astype(np.int64).tobytes()], type=pa.large_binary()),
-            pa.array([vals.astype(np.float64).tobytes()], type=pa.large_binary()),
-        ],
+        [pa.array([a.tobytes()], type=pa.large_binary()) for a in (idx, vals)],
         names=["idx_b", "val_b"],
     )
 
 
-def _pack_partials(partials):
-    """(idx long, partial double) rows → one (idx_b, val_b) blob row per
-    partition, so the driver collects O(parts) rows instead of O(V)."""
-
-    def pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idxs, vals = [], []
-        for b in batches:
-            idxs.append(b.column("idx").to_numpy(zero_copy_only=False))
-            vals.append(b.column("partial").to_numpy(zero_copy_only=False))
-        if idxs:
-            yield _blob_batch(np.concatenate(idxs), np.concatenate(vals))
-
-    return partials.mapInArrow(pack, _BLOB_SCHEMA)
-
-
-def _collect_blobs(df) -> list[tuple[bytes, bytes]]:
-    """Collect (idx_b, val_b) blob rows via toPandas — the Arrow transfer
-    path; DataFrame.collect() would fall back to JVM pickling, measurably
-    slower for multi-MB binary columns."""
-    pdf = df.toPandas()
-    return list(zip(pdf["idx_b"], pdf["val_b"]))
-
-
-def _merge_blobs(blobs, out: np.ndarray, op) -> None:
-    """Driver-side merge of collected blobs into the dense vector with
-    ``op`` (np.add / np.minimum) applied element-wise at the packed indices."""
-    for idx_b, val_b in blobs:
-        idx = np.frombuffer(idx_b, dtype=np.int64)
-        vals = np.frombuffer(val_b, dtype=np.float64)
-        op.at(out, idx, vals)
+def _row_batch(idx: np.ndarray, vals: np.ndarray):
+    return pa.RecordBatch.from_arrays([pa.array(idx), pa.array(vals)], names=["idx", "val"])
 
 
 class PackedGraph:
     """The CSR pack shared by every kernel: sorted id universe + persisted
     per-partition index arrays, sized by edge volume."""
 
-    def __init__(self, graph: Graph, target_edges_per_partition: int = 500_000,
-                 max_broadcast_vertices: int = 10_000_000):
+    def __init__(self, graph: Graph, max_broadcast_vertices: int = 10_000_000):
         self.graph = graph
         self.ids = np.sort(graph.vertices.toPandas()["id"].to_numpy(dtype=np.int64))
         self.n = len(self.ids)
         if self.n == 0:
             raise ValueError("graph has no vertices")
-        if self.n > max_broadcast_vertices:
-            raise ValueError(
-                f"{self.n} vertices exceeds the dense-vector envelope "
-                f"({max_broadcast_vertices}); use the relational algorithms"
-            )
+        self.check_envelope(max_broadcast_vertices)
         n_edges = graph.edges_sym.count()
-        self.parts = max(
-            1, min(graph.num_partitions, -(-n_edges // target_edges_per_partition))
-        )
-        # coalesce, NOT repartition: the kernel's per-partition bincount +
-        # driver add/min-merge is correct under ANY edge grouping, so the
-        # pack needs no src-hash shuffle at all — a narrow merge of the
-        # already-persisted edges_sym partitions (guide §2.4: remove shuffles
-        # outright). Measured: 4M-edge pack 5.6s → 1.8s. The 500k target
-        # (was 2M) trades a little per-superstep blob-collect volume
-        # (parts × touched-dst rows) for pack/scatter parallelism.
-        self.packed = _pack_partitions(
-            graph.edges_sym.coalesce(self.parts), self.ids
-        ).persist()
+        self.parts = max(1, min(graph.num_partitions, -(-n_edges // PACK_EDGES_PER_PARTITION)))
+        # coalesce, NOT repartition: the per-task combine + merge is correct
+        # under ANY edge grouping, so the pack needs no src-hash shuffle at
+        # all — a narrow merge of the already-persisted edges_sym partitions
+        # (guide §2.4: remove shuffles outright). Measured: 4M-edge pack
+        # 5.6s → 1.8s.
+        self.packed = _pack_partitions(graph.edges_sym.coalesce(self.parts), self.ids).persist()
         self.packed.count()
+        # The driver merge reads the pack through few enough tasks that one
+        # superstep collects ≤ _DRIVER_COMBINE_ENTRIES entries (one partial
+        # per task). coalesce() is a narrow merge of the persisted blob rows,
+        # so the pack stays wide and cached while the loop reads it narrow.
+        merge_parts = max(1, min(self.parts, _DRIVER_COMBINE_ENTRIES // self.n))
+        self.driver_packed = (
+            self.packed.coalesce(merge_parts) if merge_parts < self.parts else self.packed
+        )
+
+    def check_envelope(self, max_broadcast_vertices: int) -> None:
+        if self.n > max_broadcast_vertices:
+            raise ValueError(f"{self.n} vertices exceeds the dense-vector envelope "
+                             f"({max_broadcast_vertices}); use the relational algorithms")
 
     def unpersist(self):
         self.packed.unpersist()
 
 
-def packed_graph(graph: Graph, target_edges_per_partition: int = 500_000,
-                 max_broadcast_vertices: int = 10_000_000) -> PackedGraph:
-    """Session-cached CSR pack for ``graph``: the pack is a derived index of
-    the (already persisted) symmetrized edge view — exactly the class of
-    reuse ``Graph.edges_sym``/``Graph.degrees`` already provide for the
-    relational algorithms, extended to the kernel twins. Repeat kernel calls
-    on the same Graph object (pagerank_csr then sssp_csr, or repeated
-    invocations in one session) skip the re-pack; the cache dies with the
-    Graph object / session and is keyed on the pack parameters, never on
-    input paths — nothing survives across runs. ``Graph.unpersist()``
-    releases the cached packs too."""
-    cache = graph.__dict__.setdefault("_csr_pack_cache", {})
-    key = (target_edges_per_partition, max_broadcast_vertices)
-    pg = cache.get(key)
+def packed_graph(graph: Graph, max_broadcast_vertices: int = 10_000_000) -> PackedGraph:
+    """The Graph's session-cached CSR pack: a derived index of the (already
+    persisted) symmetrized edge view, like ``Graph.edges_sym``/``degrees``.
+    Repeat kernel calls on one Graph object (pagerank_csr then sssp_csr, or
+    repeated invocations) skip the re-pack; the pack dies with the Graph /
+    session, nothing survives across runs, and ``Graph.unpersist()``
+    releases it. The envelope is checked on every call."""
+    pg = graph.__dict__.get("_csr_pack_cache")
     if pg is None:
-        pg = PackedGraph(graph, target_edges_per_partition, max_broadcast_vertices)
-        cache[key] = pg
+        pg = graph._csr_pack_cache = PackedGraph(graph, max_broadcast_vertices)
+    pg.check_envelope(max_broadcast_vertices)
     return pg
+
+
+def _gather(pg: PackedGraph, state, message: Callable[[object, pa.RecordBatch], tuple],
+            add: bool) -> np.ndarray:
+    """One superstep over the pack: broadcast ``state``, let
+    ``message(state, pack_row)`` turn every pack row into ``(dst_idx, value)``
+    messages, combine them per task into one partial and merge the partials
+    into the dense gathered vector — the sum (``add``) or the minimum of the
+    messages each vertex received; 0 / +inf where none arrived."""
+    n = pg.n
+    identity = 0.0 if add else np.inf
+    driver_merge = n <= DRIVER_COMBINE_MAX_VERTICES
+    emit = _blob_batch if driver_merge else _row_batch
+    bc = pg.graph.spark.sparkContext.broadcast(state)
+
+    def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # accumulate across every pack row in the task's partition and emit
+        # ONE partial — coalesced tasks hold several pack rows
+        st = bc.value
+        acc = None
+        for b in batches:
+            dst_idx, vals = message(st, b)
+            if add:
+                sums = np.bincount(dst_idx, weights=vals, minlength=n)
+                acc = sums if acc is None else acc + sums
+            else:
+                if acc is None:
+                    acc = np.full(n, identity)
+                np.minimum.at(acc, dst_idx, vals)
+        if acc is not None:
+            touched = np.nonzero(acc != identity)[0]
+            yield emit(touched, acc[touched])
+
+    gathered = np.full(n, identity)
+    try:
+        if driver_merge:
+            # toPandas is the Arrow transfer; collect() would pickle the blobs
+            pdf = pg.driver_packed.mapInArrow(combine, "idx_b binary, val_b binary").toPandas()
+            op = np.add if add else np.minimum
+            for idx_b, val_b in zip(pdf["idx_b"], pdf["val_b"]):
+                op.at(gathered, np.frombuffer(idx_b, dtype=np.int64),
+                      np.frombuffer(val_b, dtype=np.float64))
+        else:
+            merge = F.sum("val") if add else F.min("val")
+            pdf = (
+                pg.packed.mapInArrow(combine, "idx long, val double")
+                .groupBy("idx").agg(merge.alias("val"))
+                .toPandas()
+            )
+            gathered[pdf["idx"].to_numpy()] = pdf["val"].to_numpy()
+    finally:
+        bc.destroy()
+    return gathered
+
+
+def _state_frame(pg: PackedGraph, col: str, values: np.ndarray):
+    """(id, col) result frame of a dense vector."""
+    return pg.graph.spark.createDataFrame(
+        pd.DataFrame({"id": pg.ids, col: values}), f"id long, {col} double"
+    )
+
+
+def _contributions(contrib: np.ndarray, b: pa.RecordBatch):
+    return _column(b, "dst_idx", np.int64), contrib[_column(b, "src_idx", np.int64)]
 
 
 def pagerank_csr(
@@ -185,8 +217,6 @@ def pagerank_csr(
     max_iter: int = 200,
     damping: float = 0.85,
     max_broadcast_vertices: int = 10_000_000,
-    target_edges_per_partition: int = 500_000,
-    combine: str = "auto",
 ) -> PregelResult:
     """PageRank FAST PATH on CSR-packed partitions with a broadcast state
     vector — single-box/moderate-graph accelerator, ≤ 10⁷ vertices by
@@ -196,221 +226,97 @@ def pagerank_csr(
     """
     if mode not in ("reference", "convergence"):
         raise ValueError(f"unknown mode {mode!r}")
-    spark = graph.spark
-    sc = spark.sparkContext
-
-    pg = packed_graph(graph, target_edges_per_partition, max_broadcast_vertices)
-    ids, n, parts, packed = pg.ids, pg.n, pg.parts, pg.packed
-    if combine == "auto":
-        # driver-side combine skips the per-superstep shuffle stage; sensible
-        # while one dense partial per task stays collect-friendly (the loop
-        # partitioning below bounds total volume to ~4M (idx, value) entries)
-        combine = "driver" if n <= 2_000_000 else "shuffle"
-    # Decouple PACK parallelism from LOOP parallelism: packing wants many
-    # partitions (parallel Arrow conversion), the driver combine wants few
-    # (per-superstep collect volume is loop_parts × touched ≤ loop_parts × n
-    # entries — each task now emits ONE accumulated partial). coalesce() is
-    # a narrow merge of the persisted blob rows, so the pack stays wide and
-    # cached while the loop reads it at bounded width.
-    if combine == "driver":
-        loop_parts = max(1, min(parts, 4_000_000 // max(n, 1)))
-    else:
-        loop_parts = parts
-    run_packed = packed if loop_parts >= parts else packed.coalesce(loop_parts)
-
+    pg = packed_graph(graph, max_broadcast_vertices)
+    ids, n = pg.ids, pg.n
 
     # degree on the symmetrized multigraph, as a dense vector (Arrow path)
-    deg = np.zeros(n, dtype=np.float64)
     deg_pdf = graph.degrees.toPandas()
-    deg[np.searchsorted(ids, deg_pdf["id"].to_numpy(dtype=np.int64))] = deg_pdf[
-        "deg"
-    ].to_numpy(dtype=np.float64)
+    deg = np.zeros(n)
+    deg[np.searchsorted(ids, deg_pdf["id"].to_numpy(dtype=np.int64))] = deg_pdf["deg"]
 
     teleport = (1.0 - damping) / n
     x = np.zeros(n) if mode == "reference" else np.full(n, 1.0 / n)
+    limit = iterations if mode == "reference" else max_iter
     metrics: list[SuperstepMetrics] = []
-    step, converged = 0, False
-
-    while True:
-        if mode == "reference":
-            if step >= iterations:
-                break
-        elif step >= max_iter:
-            break
+    step, converged = 0, mode == "reference"
+    while step < limit:
         t0 = time.monotonic()
-        bc = sc.broadcast(x / deg)  # contribution per source, precomputed
-
-        def scatter_gather(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            contrib = bc.value
-            for b in batches:
-                src_idx = np.frombuffer(b.column("src_idx")[0].as_py(), dtype=np.int64)
-                dst_idx = np.frombuffer(b.column("dst_idx")[0].as_py(), dtype=np.int64)
-                sums = np.bincount(dst_idx, weights=contrib[src_idx], minlength=0)
-                touched = np.nonzero(sums)[0]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(touched, type=pa.int64()),
-                     pa.array(sums[touched], type=pa.float64())],
-                    names=["idx", "partial"],
-                )
-
-        def scatter_gather_blob(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            # accumulate across every blob row in the task's partition and
-            # emit ONE partial — collect volume is loop_parts × touched, not
-            # blob-rows × touched (coalesced tasks hold several blob rows)
-            contrib = bc.value
-            acc = None
-            for b in batches:
-                src_idx = np.frombuffer(b.column("src_idx")[0].as_py(), dtype=np.int64)
-                dst_idx = np.frombuffer(b.column("dst_idx")[0].as_py(), dtype=np.int64)
-                sums = np.bincount(dst_idx, weights=contrib[src_idx], minlength=len(contrib))
-                acc = sums if acc is None else acc + sums
-            if acc is not None:
-                touched = np.nonzero(acc)[0]
-                yield _blob_batch(touched, acc[touched])
-
-        if combine == "shuffle":
-            # distributed per-dst combine; the driver sees ≤ V unique idx,
-            # packed into one blob row per post-shuffle partition
-            partials = run_packed.mapInArrow(
-                scatter_gather, "idx long, partial double"
-            ).groupBy("idx").agg(F.sum("partial").alias("partial"))
-            rows = _collect_blobs(_pack_partials(partials))
-        else:
-            # one blob row per loop partition; driver add-merges ≤ loop_parts
-            rows = _collect_blobs(
-                run_packed.mapInArrow(scatter_gather_blob, _BLOB_SCHEMA)
-            )
-        bc.destroy()
-        gathered = np.zeros(n)
-        _merge_blobs(rows, gathered, np.add)
-        new_x = teleport + damping * gathered
+        # contribution per source, precomputed
+        new_x = teleport + damping * _gather(pg, x / deg, _contributions, add=True)
         delta = float(np.max(np.abs(new_x - x)))
         x = new_x
         step += 1
-        metrics.append(
-            SuperstepMetrics(
-                superstep=step,
-                seconds=round(time.monotonic() - t0, 6),
-                delta=delta if mode == "convergence" else None,
-            )
-        )
+        metrics.append(SuperstepMetrics(
+            superstep=step, seconds=round(time.monotonic() - t0, 6),
+            delta=delta if mode == "convergence" else None,
+        ))
         if mode == "convergence" and delta < tol:
             converged = True
             break
 
-    # the pack stays cached on the Graph for the session (see packed_graph)
-    if mode == "reference":
-        converged = True
-    import pandas as pd
-
-    out = spark.createDataFrame(
-        pd.DataFrame({"id": ids, "value": x}), "id long, value double"
-    )
-    return PregelResult(state=out, supersteps=step, converged=converged, metrics=metrics)
+    return PregelResult(state=_state_frame(pg, "value", x), supersteps=step,
+                        converged=converged, metrics=metrics)
 
 
-def _frontier_min_loop(graph: Graph, init: np.ndarray, plus_weight: bool,
-                       max_iter: int, out_col: str,
-                       target_edges_per_partition: int = 500_000) -> PregelResult:
+def _frontier_min(pg: PackedGraph, init: np.ndarray, weighted: bool,
+                  max_iter: int, out_col: str) -> PregelResult:
     """Shared frontier min-combiner kernel (SSSP: msg = val+w; CC: msg = val).
-    Per superstep one mapInArrow pass scatters from frontier sources only and
-    min-combines per destination inside the partition (np.minimum.at — the
-    map-side combiner); the driver min-merges ≤ parts packed blob rows
-    (frontier-bounded volume, never per-vertex Arrow rows) and computes the
-    next frontier mask."""
-    import pandas as pd
+    Per superstep only frontier sources send; the next frontier is the set
+    of vertices whose value fell."""
 
-    spark = graph.spark
-    sc = spark.sparkContext
-    pg = packed_graph(graph, target_edges_per_partition)
-    ids, n = pg.ids, pg.n
-    # bounded-collect loop partitioning (see pagerank_csr): one accumulated
-    # partial per task, ≤ ~4M (idx, value) entries collected per superstep
-    loop_parts = max(1, min(pg.parts, 4_000_000 // max(n, 1)))
-    run_packed = (
-        pg.packed if loop_parts >= pg.parts else pg.packed.coalesce(loop_parts)
-    )
+    def message(st, b: pa.RecordBatch):
+        v, frontier = st
+        src_idx = _column(b, "src_idx", np.int64)
+        active = frontier[src_idx]
+        msg = v[src_idx[active]]
+        if weighted:
+            msg = msg + _column(b, "w", np.float64)[active]
+        return _column(b, "dst_idx", np.int64)[active], msg
 
     val = init
-    frontier = np.isfinite(val) if plus_weight else np.ones(n, dtype=bool)
+    frontier = np.isfinite(val)
     metrics: list[SuperstepMetrics] = []
     step = 0
     while step < max_iter and frontier.any():
         t0 = time.monotonic()
-        bc = sc.broadcast((val, frontier))
-
-        def scatter_min(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            # min-accumulate across every blob row in the task's partition,
-            # emit ONE partial (frontier-bounded volume per task)
-            v, fr = bc.value
-            mins = None
-            for b in batches:
-                src_idx = np.frombuffer(b.column("src_idx")[0].as_py(), dtype=np.int64)
-                dst_idx = np.frombuffer(b.column("dst_idx")[0].as_py(), dtype=np.int64)
-                active = fr[src_idx]
-                if not active.any():
-                    continue
-                s, d = src_idx[active], dst_idx[active]
-                msg = v[s] + (
-                    np.frombuffer(b.column("w")[0].as_py(), dtype=np.float64)[active]
-                    if plus_weight
-                    else 0.0
-                )
-                if mins is None:
-                    mins = np.full(len(v), np.inf)
-                np.minimum.at(mins, d, msg)
-            if mins is not None:
-                touched = np.nonzero(np.isfinite(mins))[0]
-                yield _blob_batch(touched, mins[touched])
-
-        rows = _collect_blobs(run_packed.mapInArrow(scatter_min, _BLOB_SCHEMA))
-        bc.destroy()
-        new_val = val.copy()
-        _merge_blobs(rows, new_val, np.minimum)
+        new_val = np.minimum(val, _gather(pg, (val, frontier), message, add=False))
         frontier = new_val < val
         val = new_val
         step += 1
-        metrics.append(
-            SuperstepMetrics(
-                superstep=step,
-                seconds=round(time.monotonic() - t0, 6),
-                changed=int(frontier.sum()),
-            )
-        )
+        metrics.append(SuperstepMetrics(
+            superstep=step, seconds=round(time.monotonic() - t0, 6),
+            changed=int(frontier.sum()),
+        ))
 
-    # the pack stays cached on the Graph for the session (see packed_graph)
     converged = not frontier.any()  # empty frontier = true fixpoint
     if not converged:
         warn_unconverged(f"csr_frontier_min[{out_col}]", step, max_iter)
-    out = spark.createDataFrame(
-        pd.DataFrame({"id": ids, out_col: val}), f"id long, {out_col} double"
-    )
-    return PregelResult(state=out, supersteps=step, converged=converged, metrics=metrics)
+    return PregelResult(state=_state_frame(pg, out_col, val), supersteps=step,
+                        converged=converged, metrics=metrics)
 
 
 def sssp_csr(graph: Graph, source: int, max_iter: int = MAX_FIXPOINT_ITERS) -> PregelResult:
     """SSSP on the CSR pack — same semantics as ``algorithms.sssp``
     (intended Pregel min-plus; +inf for unreachable)."""
-    pg_ids = np.sort(graph.vertices.toPandas()["id"].to_numpy(dtype=np.int64))
-    init = np.full(len(pg_ids), np.inf)
-    pos = np.searchsorted(pg_ids, source)
-    if pos < len(pg_ids) and pg_ids[pos] == source:
+    pg = packed_graph(graph)
+    init = np.full(pg.n, np.inf)
+    pos = np.searchsorted(pg.ids, source)
+    if pos < pg.n and pg.ids[pos] == source:
         init[pos] = 0.0
-    return _frontier_min_loop(graph, init, plus_weight=True, max_iter=max_iter,
-                              out_col="dist")
+    return _frontier_min(pg, init, weighted=True, max_iter=max_iter, out_col="dist")
 
 
 def cc_csr(graph: Graph, max_iter: int = MAX_FIXPOINT_ITERS) -> PregelResult:
     """Connected components (hash-min) on the CSR pack — label = min id in
     component, returned as double-typed 'component' converted to long."""
-    ids = np.sort(graph.vertices.toPandas()["id"].to_numpy(dtype=np.int64))
+    pg = packed_graph(graph)
     # labels as float64 to share the min kernel; ids are exactly representable
     # up to 2^53 — guard the envelope explicitly
-    if len(ids) and (ids.max() >= 2**53 or ids.min() <= -(2**53)):
+    if pg.ids[-1] >= 2**53 or pg.ids[0] <= -(2**53):
         raise ValueError("vertex ids exceed the float64-exact range (2^53); "
                          "use the relational connected_components")
-    res = _frontier_min_loop(graph, ids.astype(np.float64), plus_weight=False,
-                             max_iter=max_iter, out_col="component")
+    res = _frontier_min(pg, pg.ids.astype(np.float64), weighted=False,
+                        max_iter=max_iter, out_col="component")
     out = res.state.select("id", F.col("component").cast("long").alias("component"))
     return PregelResult(state=out, supersteps=res.supersteps,
                         converged=res.converged, metrics=res.metrics)

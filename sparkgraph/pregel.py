@@ -283,7 +283,8 @@ class SuperstepLoop:
         aggregates the joined rows by ``dst`` into one column per receiving
         ``id``; ``apply`` selects the new state, ``changed`` included, from
         the state left-joined with that aggregate (NULL where no message
-        arrived). The loop halts when nothing changed.
+        arrived). The loop halts when nothing changed. The caller warns on
+        ``max_iter``: only it knows whether that ceiling is the lever.
 
         The truncation is lazy: the changed count is the superstep's one
         action and materializes the checkpoint, so a superstep is one Spark
@@ -302,7 +303,6 @@ class SuperstepLoop:
             self.step_done(state, step, changed=changed)
             if changed == 0:
                 return state, step, True
-        warn_unconverged(self.algorithm, step, max_iter)
         return state, step, False
 
     def step_started(self) -> None:

@@ -2,11 +2,14 @@
 
 import math
 
-from sparkgraph.algorithms import connected_components, sssp
+import pytest
+
+from sparkgraph.algorithms import connected_components, pagerank, sssp
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 from sparkgraph.io.synth import powerlaw_edges
-from sparkgraph.kernels import cc_csr, sssp_csr
+import sparkgraph.kernels.csr as csr_kernel
+from sparkgraph.kernels import cc_csr, pagerank_csr, sssp_csr
 
 from tests.fixtures import GRAPH_MAIN
 
@@ -48,3 +51,27 @@ def test_cc_csr_equals_relational_fixture_and_powerlaw(spark):
         csr = {r.id: r.component for r in cc_csr(g).state.collect()}
         assert rel == csr
         g.unpersist()
+
+
+@pytest.mark.parametrize("kernel", ["pagerank", "sssp", "cc"])
+def test_groupby_merge_equals_relational(spark, monkeypatch, kernel):
+    """Above DRIVER_COMBINE_MAX_VERTICES the per-task partials are merged by
+    a groupBy over every pack partition instead of on the driver."""
+    monkeypatch.setattr(csr_kernel, "DRIVER_COMBINE_MAX_VERTICES", 0)
+    # 40k symmetrized edges in 10k-edge pack rows: a 4-partition pack
+    monkeypatch.setattr(csr_kernel, "PACK_EDGES_PER_PARTITION", 10_000)
+    g = Graph(powerlaw_edges(spark, 20_000, 2_000), num_partitions=4)
+    assert csr_kernel.packed_graph(g).parts == 4
+    if kernel == "pagerank":
+        rel = {r.id: r.value for r in pagerank(g, iterations=5).state.collect()}
+        got = {r.id: r.value for r in pagerank_csr(g, iterations=5).state.collect()}
+        assert set(got) == set(rel)
+        assert all(math.isclose(rel[v], got[v], rel_tol=1e-12) for v in rel)
+    elif kernel == "sssp":
+        src = min(r.id for r in g.vertices.collect())
+        rel = {r.id: r.dist for r in sssp(g, source=src).state.collect()}
+        assert {r.id: r.dist for r in sssp_csr(g, source=src).state.collect()} == rel
+    else:
+        rel = {r.id: r.component for r in connected_components(g).state.collect()}
+        assert {r.id: r.component for r in cc_csr(g).state.collect()} == rel
+    g.unpersist()

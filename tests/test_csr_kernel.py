@@ -9,6 +9,7 @@ from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 from sparkgraph.io.synth import powerlaw_edges
 from sparkgraph.kernels import pagerank_csr
+from sparkgraph.kernels.csr import packed_graph
 
 from tests.fixtures import GRAPH_CHAIN, GRAPH_MAIN
 
@@ -44,6 +45,10 @@ def test_csr_on_skewed_graph(spark):
 
 def test_csr_envelope_guard(spark):
     g = Graph(edges_from_pairs(spark, GRAPH_CHAIN), num_partitions=4)
+    with pytest.raises(ValueError, match="envelope"):
+        pagerank_csr(g, max_broadcast_vertices=2)
+    # a pack cached under the default envelope is checked again per call
+    packed_graph(g)
     with pytest.raises(ValueError, match="envelope"):
         pagerank_csr(g, max_broadcast_vertices=2)
     g.unpersist()

@@ -1,5 +1,6 @@
 """DAG layering / topological order vs pure-python replays."""
 
+import logging
 import random
 
 import pytest
@@ -50,17 +51,22 @@ def test_deep_chain_supersteps_equal_depth(spark):
     assert res.supersteps == 13
 
 
-def test_cycle_raises(spark):
+def test_cycle_raises(spark, caplog):
     pairs = [(0, 1), (1, 2), (2, 0), (2, 3)]
-    with pytest.raises(ValueError, match="cycle"):
-        longest_path_layers(_edges_df(spark, pairs))
+    with caplog.at_level(logging.WARNING, logger="sparkgraph"):
+        with pytest.raises(ValueError, match="cycle"):
+            longest_path_layers(_edges_df(spark, pairs))
+    # a proven cycle is not an iteration ceiling: no "raise max_iter" advice
+    assert not any("ceiling" in r.message for r in caplog.records)
 
 
-def test_shallow_max_iter_warns_not_raises(spark):
+def test_shallow_max_iter_warns_not_raises(spark, caplog):
     # depth-12 chain with max_iter=3: unconverged but NOT provably cyclic
     pairs = [(i, i + 1) for i in range(12)]
-    res = longest_path_layers(_edges_df(spark, pairs), max_iter=3)
+    with caplog.at_level(logging.WARNING, logger="sparkgraph"):
+        res = longest_path_layers(_edges_df(spark, pairs), max_iter=3)
     assert not res.converged
+    assert any("max_iter ceiling" in r.message for r in caplog.records)
 
 
 def test_topological_order_is_valid_and_deterministic(spark):
