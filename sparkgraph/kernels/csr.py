@@ -12,11 +12,13 @@ vectorized ``message`` turns each pack row into ``(dst_idx, value)`` pairs
 (PageRank ``contrib[src]``; SSSP/CC ``value[src] (+ w)`` from frontier
 sources), and combine each task's pairs into ONE partial (``np.bincount`` /
 ``np.minimum.at`` — the reference's per-VM combiner, worker.go:269-284).
-The vertex count picks the merge: up to ``DRIVER_COMBINE_MAX_VERTICES`` the
-driver sum/min-merges per-task PACKED BLOBS (one binary row per task, read
-through few enough tasks to collect ≤ ~4M entries a superstep); above it a
-``groupBy(idx)`` merges the partials of every pack partition. The kernel
-applies its update on the dense gathered vector and rebroadcasts.
+The driver sum/min-merges the partials, which arrive as PACKED BLOBS (one
+binary row per task; the pack is read through few enough tasks that a
+superstep collects ≤ ~4M entries), applies the kernel's update on the dense
+gathered vector and rebroadcasts. There is no shuffle merge: at 2.9M and
+6.7M vertices on 4 cores a ``groupBy(idx)`` merge of every pack partition's
+partial ran 2-3x slower than the one-task driver merge for all three kernels
+(docs/SCALE.md, scripts/csr_scale_bench.py).
 
 Scale envelope — this is a FAST PATH, not the scale path: the kernels
 materialize the dense state vector on the driver and broadcast it each
@@ -42,9 +44,7 @@ from sparkgraph.graph import Graph
 from sparkgraph.pregel import MAX_FIXPOINT_ITERS, PregelResult, SuperstepMetrics, warn_unconverged
 
 PACK_EDGES_PER_PARTITION = 500_000
-# driver merge up to this many vertices, groupBy merge above
-DRIVER_COMBINE_MAX_VERTICES = 2_000_000
-# (idx, value) entries one driver-merged superstep collects at most
+# (idx, value) entries one superstep collects at most
 _DRIVER_COMBINE_ENTRIES = 4_000_000
 
 
@@ -82,15 +82,13 @@ def _column(batch: pa.RecordBatch, name: str, dtype) -> np.ndarray:
 
 
 def _blob_batch(idx: np.ndarray, vals: np.ndarray):
-    """int64 indices + float64 values → ONE (idx_b, val_b) binary row."""
     return pa.RecordBatch.from_arrays(
-        [pa.array([a.tobytes()], type=pa.large_binary()) for a in (idx, vals)],
+        [
+            pa.array([idx.astype(np.int64).tobytes()], type=pa.large_binary()),
+            pa.array([vals.astype(np.float64).tobytes()], type=pa.large_binary()),
+        ],
         names=["idx_b", "val_b"],
     )
-
-
-def _row_batch(idx: np.ndarray, vals: np.ndarray):
-    return pa.RecordBatch.from_arrays([pa.array(idx), pa.array(vals)], names=["idx", "val"])
 
 
 class PackedGraph:
@@ -105,20 +103,26 @@ class PackedGraph:
             raise ValueError("graph has no vertices")
         self.check_envelope(max_broadcast_vertices)
         n_edges = graph.edges_sym.count()
-        self.parts = max(1, min(graph.num_partitions, -(-n_edges // PACK_EDGES_PER_PARTITION)))
-        # coalesce, NOT repartition: the per-task combine + merge is correct
-        # under ANY edge grouping, so the pack needs no src-hash shuffle at
-        # all — a narrow merge of the already-persisted edges_sym partitions
-        # (guide §2.4: remove shuffles outright). Measured: 4M-edge pack
-        # 5.6s → 1.8s.
-        self.packed = _pack_partitions(graph.edges_sym.coalesce(self.parts), self.ids).persist()
+        self.parts = max(
+            1, min(graph.num_partitions, -(-n_edges // PACK_EDGES_PER_PARTITION))
+        )
+        # coalesce, NOT repartition: the kernel's per-partition bincount +
+        # driver add/min-merge is correct under ANY edge grouping, so the
+        # pack needs no src-hash shuffle at all — a narrow merge of the
+        # already-persisted edges_sym partitions (guide §2.4: remove shuffles
+        # outright). Measured: 4M-edge pack 5.6s → 1.8s. The 500k target
+        # (was 2M) trades a little per-superstep blob-collect volume
+        # (parts × touched-dst rows) for pack/scatter parallelism.
+        self.packed = _pack_partitions(
+            graph.edges_sym.coalesce(self.parts), self.ids
+        ).persist()
         self.packed.count()
-        # The driver merge reads the pack through few enough tasks that one
-        # superstep collects ≤ _DRIVER_COMBINE_ENTRIES entries (one partial
-        # per task). coalesce() is a narrow merge of the persisted blob rows,
-        # so the pack stays wide and cached while the loop reads it narrow.
+        # A superstep reads the pack through few enough tasks that it
+        # collects ≤ _DRIVER_COMBINE_ENTRIES entries (one partial per task).
+        # coalesce() is a narrow merge of the persisted blob rows, so the
+        # pack stays wide and cached while the loop reads it narrow.
         merge_parts = max(1, min(self.parts, _DRIVER_COMBINE_ENTRIES // self.n))
-        self.driver_packed = (
+        self.loop_packed = (
             self.packed.coalesce(merge_parts) if merge_parts < self.parts else self.packed
         )
 
@@ -132,12 +136,16 @@ class PackedGraph:
 
 
 def packed_graph(graph: Graph, max_broadcast_vertices: int = 10_000_000) -> PackedGraph:
-    """The Graph's session-cached CSR pack: a derived index of the (already
-    persisted) symmetrized edge view, like ``Graph.edges_sym``/``degrees``.
-    Repeat kernel calls on one Graph object (pagerank_csr then sssp_csr, or
-    repeated invocations) skip the re-pack; the pack dies with the Graph /
-    session, nothing survives across runs, and ``Graph.unpersist()``
-    releases it. The envelope is checked on every call."""
+    """Session-cached CSR pack for ``graph``: the pack is a derived index of
+    the (already persisted) symmetrized edge view — exactly the class of
+    reuse ``Graph.edges_sym``/``Graph.degrees`` already provide for the
+    relational algorithms, extended to the kernel twins. Repeat kernel calls
+    on the same Graph object (pagerank_csr then sssp_csr, or repeated
+    invocations in one session) skip the re-pack; the cache dies with the
+    Graph object / session and holds one pack per Graph, never keyed on
+    input paths — nothing survives across runs. ``Graph.unpersist()``
+    releases the cached pack too. The envelope is checked on every call,
+    cached pack or not."""
     pg = graph.__dict__.get("_csr_pack_cache")
     if pg is None:
         pg = graph._csr_pack_cache = PackedGraph(graph, max_broadcast_vertices)
@@ -150,49 +158,41 @@ def _gather(pg: PackedGraph, state, message: Callable[[object, pa.RecordBatch], 
     """One superstep over the pack: broadcast ``state``, let
     ``message(state, pack_row)`` turn every pack row into ``(dst_idx, value)``
     messages, combine them per task into one partial and merge the partials
-    into the dense gathered vector — the sum (``add``) or the minimum of the
-    messages each vertex received; 0 / +inf where none arrived."""
+    on the driver into the dense gathered vector — the sum (``add``) or the
+    minimum of the messages each vertex received; 0 / +inf where none
+    arrived."""
     n = pg.n
     identity = 0.0 if add else np.inf
-    driver_merge = n <= DRIVER_COMBINE_MAX_VERTICES
-    emit = _blob_batch if driver_merge else _row_batch
     bc = pg.graph.spark.sparkContext.broadcast(state)
 
     def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # accumulate across every pack row in the task's partition and emit
-        # ONE partial — coalesced tasks hold several pack rows
+        # ONE partial — a coalesced task's Arrow batch holds several pack
+        # rows, and a message reads one
         st = bc.value
         acc = None
         for b in batches:
-            dst_idx, vals = message(st, b)
-            if add:
-                sums = np.bincount(dst_idx, weights=vals, minlength=n)
-                acc = sums if acc is None else acc + sums
-            else:
-                if acc is None:
-                    acc = np.full(n, identity)
-                np.minimum.at(acc, dst_idx, vals)
+            for i in range(b.num_rows):
+                dst_idx, vals = message(st, b.slice(i, 1))
+                if add:
+                    sums = np.bincount(dst_idx, weights=vals, minlength=n)
+                    acc = sums if acc is None else acc + sums
+                else:
+                    if acc is None:
+                        acc = np.full(n, identity)
+                    np.minimum.at(acc, dst_idx, vals)
         if acc is not None:
             touched = np.nonzero(acc != identity)[0]
-            yield emit(touched, acc[touched])
+            yield _blob_batch(touched, acc[touched])
 
     gathered = np.full(n, identity)
     try:
-        if driver_merge:
-            # toPandas is the Arrow transfer; collect() would pickle the blobs
-            pdf = pg.driver_packed.mapInArrow(combine, "idx_b binary, val_b binary").toPandas()
-            op = np.add if add else np.minimum
-            for idx_b, val_b in zip(pdf["idx_b"], pdf["val_b"]):
-                op.at(gathered, np.frombuffer(idx_b, dtype=np.int64),
-                      np.frombuffer(val_b, dtype=np.float64))
-        else:
-            merge = F.sum("val") if add else F.min("val")
-            pdf = (
-                pg.packed.mapInArrow(combine, "idx long, val double")
-                .groupBy("idx").agg(merge.alias("val"))
-                .toPandas()
-            )
-            gathered[pdf["idx"].to_numpy()] = pdf["val"].to_numpy()
+        # toPandas is the Arrow transfer; collect() would pickle the blobs
+        pdf = pg.loop_packed.mapInArrow(combine, "idx_b binary, val_b binary").toPandas()
+        op = np.add if add else np.minimum
+        for idx_b, val_b in zip(pdf["idx_b"], pdf["val_b"]):
+            op.at(gathered, np.frombuffer(idx_b, dtype=np.int64),
+                  np.frombuffer(val_b, dtype=np.float64))
     finally:
         bc.destroy()
     return gathered
@@ -246,10 +246,13 @@ def pagerank_csr(
         delta = float(np.max(np.abs(new_x - x)))
         x = new_x
         step += 1
-        metrics.append(SuperstepMetrics(
-            superstep=step, seconds=round(time.monotonic() - t0, 6),
-            delta=delta if mode == "convergence" else None,
-        ))
+        metrics.append(
+            SuperstepMetrics(
+                superstep=step,
+                seconds=round(time.monotonic() - t0, 6),
+                delta=delta if mode == "convergence" else None,
+            )
+        )
         if mode == "convergence" and delta < tol:
             converged = True
             break
@@ -283,10 +286,13 @@ def _frontier_min(pg: PackedGraph, init: np.ndarray, weighted: bool,
         frontier = new_val < val
         val = new_val
         step += 1
-        metrics.append(SuperstepMetrics(
-            superstep=step, seconds=round(time.monotonic() - t0, 6),
-            changed=int(frontier.sum()),
-        ))
+        metrics.append(
+            SuperstepMetrics(
+                superstep=step,
+                seconds=round(time.monotonic() - t0, 6),
+                changed=int(frontier.sum()),
+            )
+        )
 
     converged = not frontier.any()  # empty frontier = true fixpoint
     if not converged:
@@ -308,7 +314,9 @@ def sssp_csr(graph: Graph, source: int, max_iter: int = MAX_FIXPOINT_ITERS) -> P
 
 def cc_csr(graph: Graph, max_iter: int = MAX_FIXPOINT_ITERS) -> PregelResult:
     """Connected components (hash-min) on the CSR pack — label = min id in
-    component, returned as double-typed 'component' converted to long."""
+    component, returned as double-typed 'component' converted to long. The
+    2^53 id check reads the pack's ids, so it runs after packing: a refused
+    graph keeps its pack cached until ``Graph.unpersist()``."""
     pg = packed_graph(graph)
     # labels as float64 to share the min kernel; ids are exactly representable
     # up to 2^53 — guard the envelope explicitly

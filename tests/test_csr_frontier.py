@@ -54,14 +54,16 @@ def test_cc_csr_equals_relational_fixture_and_powerlaw(spark):
 
 
 @pytest.mark.parametrize("kernel", ["pagerank", "sssp", "cc"])
-def test_groupby_merge_equals_relational(spark, monkeypatch, kernel):
-    """Above DRIVER_COMBINE_MAX_VERTICES the per-task partials are merged by
-    a groupBy over every pack partition instead of on the driver."""
-    monkeypatch.setattr(csr_kernel, "DRIVER_COMBINE_MAX_VERTICES", 0)
+def test_coalesced_pack_equals_relational(spark, monkeypatch, kernel):
+    """A 4-partition pack read through ONE coalesced task, as large graphs
+    read it: that task's Arrow batch holds all four pack rows, and every one
+    must send its messages."""
     # 40k symmetrized edges in 10k-edge pack rows: a 4-partition pack
     monkeypatch.setattr(csr_kernel, "PACK_EDGES_PER_PARTITION", 10_000)
+    monkeypatch.setattr(csr_kernel, "_DRIVER_COMBINE_ENTRIES", 1)
     g = Graph(powerlaw_edges(spark, 20_000, 2_000), num_partitions=4)
-    assert csr_kernel.packed_graph(g).parts == 4
+    pg = csr_kernel.packed_graph(g)
+    assert (pg.parts, pg.loop_packed.rdd.getNumPartitions()) == (4, 1)
     if kernel == "pagerank":
         rel = {r.id: r.value for r in pagerank(g, iterations=5).state.collect()}
         got = {r.id: r.value for r in pagerank_csr(g, iterations=5).state.collect()}
