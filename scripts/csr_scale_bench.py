@@ -1,5 +1,5 @@
 """Time the three CSR kernels on one seeded power-law graph of a few million
-vertices, where a superstep reads the pack through one coalesced task.
+vertices; each kernel call reads the whole pack through one task.
 
 ``--repo`` imports ``sparkgraph`` from another checkout (e.g. a ``git
 archive`` of an earlier commit), so two versions run the same script on the

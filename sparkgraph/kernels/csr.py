@@ -5,29 +5,36 @@ broadcast-or-shuffled vertex-state table").
 
 Strategy: pack each partition of the symmetrized edge table ONCE into dense
 numpy index arrays (the per-partition CSR the reference builds as Go maps,
-worker/worker.go:152-212) and persist it. Every superstep of
-``pagerank_csr``, ``sssp_csr`` and ``cc_csr`` is one ``_gather``: broadcast
-the dense vertex state, run one ``mapInArrow`` pass in which the kernel's
-vectorized ``message`` turns each pack row into ``(dst_idx, value)`` pairs
-(PageRank ``contrib[src]``; SSSP/CC ``value[src] (+ w)`` from frontier
-sources), and combine each task's pairs into ONE partial (``np.bincount`` /
-``np.minimum.at`` — the reference's per-VM combiner, worker.go:269-284).
-The driver sum/min-merges the partials, which arrive as PACKED BLOBS (one
-binary row per task; the pack is read through few enough tasks that a
-superstep collects ≤ ~4M entries), applies the kernel's update on the dense
-gathered vector and rebroadcasts. There is no shuffle merge: at 2.9M and
-6.7M vertices on 4 cores a ``groupBy(idx)`` merge of every pack partition's
-partial ran 2-3x slower than the one-task driver merge for all three kernels
-(docs/SCALE.md, scripts/csr_scale_bench.py).
+worker/worker.go:152-212) and persist it. A call of ``pagerank_csr``,
+``sssp_csr`` or ``cc_csr`` is ONE ``_run``: broadcast the initial dense
+vertex state once, run one ``mapInArrow`` task over the whole pack
+(``coalesce(1)``), decode every pack row once into ``(src_idx, dst_idx, w)``
+arrays, and run every superstep inside that task — PageRank sums
+``contrib[src]`` per ``dst`` with one ``np.bincount`` per pack row, SSSP/CC
+take the minimum of ``value[src] (+ w)`` from frontier sources with
+``np.minimum.at`` (the reference's per-VM combiner, worker.go:269-284) —
+until the kernel halts or hits its ceiling. The task yields one row: the
+final state, and the seconds and delta / changed count of every superstep.
+So a call runs the same Spark jobs whatever its superstep count: the UDF
+boundary is crossed once per call, not once per superstep (*Accelerating
+Python UDFs in Vectorized Query Execution*, CIDR 2022). One task beat the
+parent's per-superstep jobs even where those read the pack through 8 tasks
+(docs/SCALE.md "Kernel choice").
+
+Costs of the one task: it holds the whole pack, about 24 B per symmetrized
+edge (int64 src/dst index + float64 weight), plus a few dense vectors in one
+Python worker; a task failure reruns the whole loop; ``metrics.seconds`` is
+the in-task compute time of each superstep (job launch and pack decode are
+outside it).
 
 Scale envelope — this is a FAST PATH, not the scale path: the kernels
-materialize the dense state vector on the driver and broadcast it each
-superstep, so their contract is graphs up to 10⁷ vertices (80 MB vector — the
-measured-safe bound on this class of driver; ``packed_graph`` raises beyond
-it, callers may consciously raise the limit to ~10⁸/800 MB where their
-driver allows). The relational engine (sparkgraph.algorithms) is the 100 TB
-path: state never leaves the cluster, and it is what the CLI and gate use by
-default. Both produce identical results (tested to 1e-12).
+materialize the dense state vector on the driver and in one task, so their
+contract is graphs up to 10⁷ vertices (80 MB vector — the measured-safe bound
+on this class of driver; ``packed_graph`` raises beyond it, callers may
+consciously raise the limit to ~10⁸/800 MB where their driver allows). The
+relational engine (sparkgraph.algorithms) is the 100 TB path: state never
+leaves the cluster, and it is what the CLI and gate use by default. Both
+produce identical results (tested to 1e-12).
 """
 
 from __future__ import annotations
@@ -38,14 +45,12 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
 from sparkgraph.pregel import MAX_FIXPOINT_ITERS, PregelResult, SuperstepMetrics, warn_unconverged
 
 PACK_EDGES_PER_PARTITION = 500_000
-# (idx, value) entries one superstep collects at most
-_DRIVER_COMBINE_ENTRIES = 4_000_000
+_PACK_COLUMNS = (("src_idx", np.int64), ("dst_idx", np.int64), ("w", np.float64))
 
 
 def _pack_partitions(edges_sym, ids: np.ndarray):
@@ -77,18 +82,16 @@ def _pack_partitions(edges_sym, ids: np.ndarray):
     )
 
 
-def _column(batch: pa.RecordBatch, name: str, dtype) -> np.ndarray:
-    return np.frombuffer(batch.column(name)[0].as_py(), dtype=dtype)
-
-
-def _blob_batch(idx: np.ndarray, vals: np.ndarray):
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([idx.astype(np.int64).tobytes()], type=pa.large_binary()),
-            pa.array([vals.astype(np.float64).tobytes()], type=pa.large_binary()),
-        ],
-        names=["idx_b", "val_b"],
-    )
+def _pack_rows(batches: Iterator[pa.RecordBatch]) -> list[tuple[np.ndarray, ...]]:
+    """Every pack row of a task as ``(src_idx, dst_idx, w)`` arrays, in pack-row
+    order. A coalesced task's Arrow batch holds several pack rows; the arrays
+    are zero-copy views of the batch buffers."""
+    return [
+        tuple(np.frombuffer(b.column(name)[i].as_buffer(), dtype=dtype)
+              for name, dtype in _PACK_COLUMNS)
+        for b in batches
+        for i in range(b.num_rows)
+    ]
 
 
 class PackedGraph:
@@ -106,25 +109,16 @@ class PackedGraph:
         self.parts = max(
             1, min(graph.num_partitions, -(-n_edges // PACK_EDGES_PER_PARTITION))
         )
-        # coalesce, NOT repartition: the kernel's per-partition bincount +
-        # driver add/min-merge is correct under ANY edge grouping, so the
-        # pack needs no src-hash shuffle at all — a narrow merge of the
-        # already-persisted edges_sym partitions (guide §2.4: remove shuffles
-        # outright). Measured: 4M-edge pack 5.6s → 1.8s. The 500k target
-        # (was 2M) trades a little per-superstep blob-collect volume
-        # (parts × touched-dst rows) for pack/scatter parallelism.
+        # coalesce, NOT repartition: the kernels combine messages per
+        # destination over ANY edge grouping, so the pack needs no src-hash
+        # shuffle at all — a narrow merge of the already-persisted edges_sym
+        # partitions (guide §2.4: remove shuffles outright). Measured: 4M-edge
+        # pack 5.6s → 1.8s. The 500k target (was 2M) keeps the pack job
+        # parallel; the kernels read it back through one task.
         self.packed = _pack_partitions(
             graph.edges_sym.coalesce(self.parts), self.ids
         ).persist()
         self.packed.count()
-        # A superstep reads the pack through few enough tasks that it
-        # collects ≤ _DRIVER_COMBINE_ENTRIES entries (one partial per task).
-        # coalesce() is a narrow merge of the persisted blob rows, so the
-        # pack stays wide and cached while the loop reads it narrow.
-        merge_parts = max(1, min(self.parts, _DRIVER_COMBINE_ENTRIES // self.n))
-        self.loop_packed = (
-            self.packed.coalesce(merge_parts) if merge_parts < self.parts else self.packed
-        )
 
     def check_envelope(self, max_broadcast_vertices: int) -> None:
         if self.n > max_broadcast_vertices:
@@ -153,60 +147,59 @@ def packed_graph(graph: Graph, max_broadcast_vertices: int = 10_000_000) -> Pack
     return pg
 
 
-def _gather(pg: PackedGraph, state, message: Callable[[object, pa.RecordBatch], tuple],
-            add: bool) -> np.ndarray:
-    """One superstep over the pack: broadcast ``state``, let
-    ``message(state, pack_row)`` turn every pack row into ``(dst_idx, value)``
-    messages, combine them per task into one partial and merge the partials
-    on the driver into the dense gathered vector — the sum (``add``) or the
-    minimum of the messages each vertex received; 0 / +inf where none
-    arrived."""
-    n = pg.n
-    identity = 0.0 if add else np.inf
-    bc = pg.graph.spark.sparkContext.broadcast(state)
+def _run(pg: PackedGraph, init: tuple, prepare: Callable[[list], Callable],
+         limit: int, done: bool = False) -> tuple[np.ndarray, list, list, bool]:
+    """Run up to ``limit`` supersteps of one kernel inside ONE task over the
+    whole pack. ``init`` — a tuple of arrays whose first is the dense result
+    vector — is broadcast once; the task decodes every pack row once,
+    ``prepare(rows)`` builds the kernel's ``superstep(state) -> (state,
+    metric, done)`` over them, and the loop halts inside the task when a
+    superstep reports ``done`` (or at once if ``done`` is already true).
+    Returns the final result vector, the in-task seconds and the metric of
+    every superstep run, and whether the loop halted."""
+    bc = pg.graph.spark.sparkContext.broadcast(init)
 
-    def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # accumulate across every pack row in the task's partition and emit
-        # ONE partial — a coalesced task's Arrow batch holds several pack
-        # rows, and a message reads one
-        st = bc.value
-        acc = None
-        for b in batches:
-            for i in range(b.num_rows):
-                dst_idx, vals = message(st, b.slice(i, 1))
-                if add:
-                    sums = np.bincount(dst_idx, weights=vals, minlength=n)
-                    acc = sums if acc is None else acc + sums
-                else:
-                    if acc is None:
-                        acc = np.full(n, identity)
-                    np.minimum.at(acc, dst_idx, vals)
-        if acc is not None:
-            touched = np.nonzero(acc != identity)[0]
-            yield _blob_batch(touched, acc[touched])
+    def loop(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        superstep = prepare(_pack_rows(batches))
+        state, halted = bc.value, done
+        seconds, metric = [], []
+        while not halted and len(seconds) < limit:
+            t0 = time.perf_counter()
+            state, m, halted = superstep(state)
+            seconds.append(time.perf_counter() - t0)
+            metric.append(m)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([state[0].tobytes()], type=pa.large_binary()),
+                pa.array([np.array(seconds, dtype=np.float64).tobytes()], type=pa.large_binary()),
+                pa.array([np.array(metric, dtype=np.float64).tobytes()], type=pa.large_binary()),
+                pa.array([halted]),
+            ],
+            names=["state", "seconds", "metric", "done"],
+        )
 
-    gathered = np.full(n, identity)
     try:
         # toPandas is the Arrow transfer; collect() would pickle the blobs
-        pdf = pg.loop_packed.mapInArrow(combine, "idx_b binary, val_b binary").toPandas()
-        op = np.add if add else np.minimum
-        for idx_b, val_b in zip(pdf["idx_b"], pdf["val_b"]):
-            op.at(gathered, np.frombuffer(idx_b, dtype=np.int64),
-                  np.frombuffer(val_b, dtype=np.float64))
+        row = pg.packed.coalesce(1).mapInArrow(
+            loop, "state binary, seconds binary, metric binary, done boolean"
+        ).toPandas().iloc[0]
     finally:
         bc.destroy()
-    return gathered
-
-
-def _state_frame(pg: PackedGraph, col: str, values: np.ndarray):
-    """(id, col) result frame of a dense vector."""
-    return pg.graph.spark.createDataFrame(
-        pd.DataFrame({"id": pg.ids, col: values}), f"id long, {col} double"
+    return (
+        np.frombuffer(row["state"], dtype=init[0].dtype),
+        np.frombuffer(row["seconds"], dtype=np.float64).tolist(),
+        np.frombuffer(row["metric"], dtype=np.float64).tolist(),
+        bool(row["done"]),
     )
 
 
-def _contributions(contrib: np.ndarray, b: pa.RecordBatch):
-    return _column(b, "dst_idx", np.int64), contrib[_column(b, "src_idx", np.int64)]
+def _state_frame(pg: PackedGraph, col: str, values: np.ndarray):
+    """(id, col) result frame of a dense vector: long for integer labels,
+    double otherwise."""
+    sql_type = "long" if values.dtype.kind == "i" else "double"
+    return pg.graph.spark.createDataFrame(
+        pd.DataFrame({"id": pg.ids, col: values}), f"id long, {col} {sql_type}"
+    )
 
 
 def pagerank_csr(
@@ -227,77 +220,71 @@ def pagerank_csr(
     if mode not in ("reference", "convergence"):
         raise ValueError(f"unknown mode {mode!r}")
     pg = packed_graph(graph, max_broadcast_vertices)
-    ids, n = pg.ids, pg.n
-
-    # degree on the symmetrized multigraph, as a dense vector (Arrow path)
-    deg_pdf = graph.degrees.toPandas()
-    deg = np.zeros(n)
-    deg[np.searchsorted(ids, deg_pdf["id"].to_numpy(dtype=np.int64))] = deg_pdf["deg"]
-
+    n = pg.n
     teleport = (1.0 - damping) / n
-    x = np.zeros(n) if mode == "reference" else np.full(n, 1.0 / n)
-    limit = iterations if mode == "reference" else max_iter
-    metrics: list[SuperstepMetrics] = []
-    step, converged = 0, mode == "reference"
-    while step < limit:
-        t0 = time.monotonic()
-        # contribution per source, precomputed
-        new_x = teleport + damping * _gather(pg, x / deg, _contributions, add=True)
-        delta = float(np.max(np.abs(new_x - x)))
-        x = new_x
-        step += 1
-        metrics.append(
-            SuperstepMetrics(
-                superstep=step,
-                seconds=round(time.monotonic() - t0, 6),
-                delta=delta if mode == "convergence" else None,
-            )
-        )
-        if mode == "convergence" and delta < tol:
-            converged = True
-            break
+    convergence = mode == "convergence"
 
-    return PregelResult(state=_state_frame(pg, "value", x), supersteps=step,
-                        converged=converged, metrics=metrics)
+    def prepare(rows):
+        # the same integer count as Graph.degrees: every symmetrized edge once
+        deg = np.zeros(n, dtype=np.int64)
+        for src_idx, _, _ in rows:
+            deg += np.bincount(src_idx, minlength=n)
+
+        def superstep(state):
+            (x,) = state
+            contrib = x / deg
+            # one bincount per pack row, summed in pack-row order
+            gathered = np.zeros(n)
+            for src_idx, dst_idx, _ in rows:
+                gathered += np.bincount(dst_idx, weights=contrib[src_idx], minlength=n)
+            new_x = teleport + damping * gathered
+            delta = float(np.max(np.abs(new_x - x)))
+            return (new_x,), delta, convergence and delta < tol
+
+        return superstep
+
+    x0 = np.full(n, 1.0 / n) if convergence else np.zeros(n)
+    x, seconds, deltas, done = _run(pg, (x0,), prepare, max_iter if convergence else iterations)
+    metrics = [
+        SuperstepMetrics(superstep=i + 1, seconds=round(s, 6), delta=d if convergence else None)
+        for i, (s, d) in enumerate(zip(seconds, deltas))
+    ]
+    return PregelResult(state=_state_frame(pg, "value", x), supersteps=len(metrics),
+                        converged=done or not convergence, metrics=metrics)
 
 
-def _frontier_min(pg: PackedGraph, init: np.ndarray, weighted: bool,
-                  max_iter: int, out_col: str) -> PregelResult:
-    """Shared frontier min-combiner kernel (SSSP: msg = val+w; CC: msg = val).
-    Per superstep only frontier sources send; the next frontier is the set
-    of vertices whose value fell."""
+def _frontier_min(pg: PackedGraph, init: np.ndarray, init_frontier: np.ndarray,
+                  weighted: bool, max_iter: int, out_col: str) -> PregelResult:
+    """Shared frontier min-combiner kernel (SSSP: msg = val+w; CC: msg = val)
+    in ``init``'s dtype. Per superstep only frontier sources send; the next
+    frontier is the set of vertices whose value fell."""
 
-    def message(st, b: pa.RecordBatch):
-        v, frontier = st
-        src_idx = _column(b, "src_idx", np.int64)
-        active = frontier[src_idx]
-        msg = v[src_idx[active]]
-        if weighted:
-            msg = msg + _column(b, "w", np.float64)[active]
-        return _column(b, "dst_idx", np.int64)[active], msg
+    def prepare(rows):
+        def superstep(state):
+            val, frontier = state
+            new_val = val.copy()
+            for src_idx, dst_idx, w in rows:
+                active = frontier[src_idx]
+                msg = val[src_idx[active]]
+                if weighted:
+                    msg = msg + w[active]
+                np.minimum.at(new_val, dst_idx[active], msg)
+            frontier = new_val < val
+            changed = int(frontier.sum())
+            return (new_val, frontier), changed, changed == 0
 
-    val = init
-    frontier = np.isfinite(val)
-    metrics: list[SuperstepMetrics] = []
-    step = 0
-    while step < max_iter and frontier.any():
-        t0 = time.monotonic()
-        new_val = np.minimum(val, _gather(pg, (val, frontier), message, add=False))
-        frontier = new_val < val
-        val = new_val
-        step += 1
-        metrics.append(
-            SuperstepMetrics(
-                superstep=step,
-                seconds=round(time.monotonic() - t0, 6),
-                changed=int(frontier.sum()),
-            )
-        )
+        return superstep
 
-    converged = not frontier.any()  # empty frontier = true fixpoint
+    # an empty frontier is a true fixpoint
+    val, seconds, changed, converged = _run(pg, (init, init_frontier), prepare, max_iter,
+                                            done=not init_frontier.any())
     if not converged:
-        warn_unconverged(f"csr_frontier_min[{out_col}]", step, max_iter)
-    return PregelResult(state=_state_frame(pg, out_col, val), supersteps=step,
+        warn_unconverged(f"csr_frontier_min[{out_col}]", len(seconds), max_iter)
+    metrics = [
+        SuperstepMetrics(superstep=i + 1, seconds=round(s, 6), changed=int(c))
+        for i, (s, c) in enumerate(zip(seconds, changed))
+    ]
+    return PregelResult(state=_state_frame(pg, out_col, val), supersteps=len(metrics),
                         converged=converged, metrics=metrics)
 
 
@@ -309,22 +296,14 @@ def sssp_csr(graph: Graph, source: int, max_iter: int = MAX_FIXPOINT_ITERS) -> P
     pos = np.searchsorted(pg.ids, source)
     if pos < pg.n and pg.ids[pos] == source:
         init[pos] = 0.0
-    return _frontier_min(pg, init, weighted=True, max_iter=max_iter, out_col="dist")
+    return _frontier_min(pg, init, np.isfinite(init), weighted=True,
+                         max_iter=max_iter, out_col="dist")
 
 
 def cc_csr(graph: Graph, max_iter: int = MAX_FIXPOINT_ITERS) -> PregelResult:
     """Connected components (hash-min) on the CSR pack — label = min id in
-    component, returned as double-typed 'component' converted to long. The
-    2^53 id check reads the pack's ids, so it runs after packing: a refused
-    graph keeps its pack cached until ``Graph.unpersist()``."""
+    component, as ``long``. Labels stay int64 throughout, so every id is
+    exact (no float64 2^53 limit)."""
     pg = packed_graph(graph)
-    # labels as float64 to share the min kernel; ids are exactly representable
-    # up to 2^53 — guard the envelope explicitly
-    if pg.ids[-1] >= 2**53 or pg.ids[0] <= -(2**53):
-        raise ValueError("vertex ids exceed the float64-exact range (2^53); "
-                         "use the relational connected_components")
-    res = _frontier_min(pg, pg.ids.astype(np.float64), weighted=False,
-                        max_iter=max_iter, out_col="component")
-    out = res.state.select("id", F.col("component").cast("long").alias("component"))
-    return PregelResult(state=out, supersteps=res.supersteps,
-                        converged=res.converged, metrics=res.metrics)
+    return _frontier_min(pg, pg.ids, np.ones(pg.n, dtype=bool), weighted=False,
+                         max_iter=max_iter, out_col="component")

@@ -55,15 +55,13 @@ def test_cc_csr_equals_relational_fixture_and_powerlaw(spark):
 
 @pytest.mark.parametrize("kernel", ["pagerank", "sssp", "cc"])
 def test_coalesced_pack_equals_relational(spark, monkeypatch, kernel):
-    """A 4-partition pack read through ONE coalesced task, as large graphs
-    read it: that task's Arrow batch holds all four pack rows, and every one
-    must send its messages."""
+    """A 4-partition pack read through the kernels' ONE coalesced task: that
+    task's Arrow batch holds all four pack rows, and every one must send its
+    messages."""
     # 40k symmetrized edges in 10k-edge pack rows: a 4-partition pack
     monkeypatch.setattr(csr_kernel, "PACK_EDGES_PER_PARTITION", 10_000)
-    monkeypatch.setattr(csr_kernel, "_DRIVER_COMBINE_ENTRIES", 1)
     g = Graph(powerlaw_edges(spark, 20_000, 2_000), num_partitions=4)
-    pg = csr_kernel.packed_graph(g)
-    assert (pg.parts, pg.loop_packed.rdd.getNumPartitions()) == (4, 1)
+    assert csr_kernel.packed_graph(g).parts == 4
     if kernel == "pagerank":
         rel = {r.id: r.value for r in pagerank(g, iterations=5).state.collect()}
         got = {r.id: r.value for r in pagerank_csr(g, iterations=5).state.collect()}
@@ -76,4 +74,15 @@ def test_coalesced_pack_equals_relational(spark, monkeypatch, kernel):
     else:
         rel = {r.id: r.component for r in connected_components(g).state.collect()}
         assert {r.id: r.component for r in cc_csr(g).state.collect()} == rel
+    g.unpersist()
+
+
+def test_cc_csr_exact_for_ids_beyond_2_53(spark):
+    """Labels stay int64: ids near 2^62, which float64 cannot tell apart,
+    get the same components as the relational algorithm."""
+    base = 2**62
+    g = Graph(edges_from_pairs(spark, [(base + s, base + d) for s, d in GRAPH_MAIN]),
+              num_partitions=4)
+    rel = {r.id: r.component for r in connected_components(g).state.collect()}
+    assert {r.id: r.component for r in cc_csr(g).state.collect()} == rel
     g.unpersist()

@@ -8,7 +8,7 @@ from sparkgraph.algorithms import pagerank
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 from sparkgraph.io.synth import powerlaw_edges
-from sparkgraph.kernels import pagerank_csr
+from sparkgraph.kernels import cc_csr, pagerank_csr, sssp_csr
 from sparkgraph.kernels.csr import packed_graph
 
 from tests.fixtures import GRAPH_CHAIN, GRAPH_MAIN
@@ -51,4 +51,51 @@ def test_csr_envelope_guard(spark):
     packed_graph(g)
     with pytest.raises(ValueError, match="envelope"):
         pagerank_csr(g, max_broadcast_vertices=2)
+    g.unpersist()
+
+
+def _jobs(spark, group, fn) -> tuple[int, object]:
+    """Spark jobs ``fn`` starts, counted through a job group that no other
+    call uses, and its result."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker reads the listener bus's output
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), res
+
+
+def test_csr_job_count_does_not_grow_with_supersteps(spark):
+    """On a cached pack a kernel call runs its supersteps inside one task, so
+    its Spark job count does not depend on how many supersteps it runs."""
+    g = Graph(edges_from_pairs(spark, GRAPH_CHAIN), num_partitions=4)
+    packed_graph(g)
+    j2, r2 = _jobs(spark, "pagerank-2", lambda: pagerank_csr(g, iterations=2))
+    j8, r8 = _jobs(spark, "pagerank-8", lambda: pagerank_csr(g, iterations=8))
+    assert (r2.supersteps, r8.supersteps) == (2, 8)
+    assert j2 == j8 > 0
+    j_near, r_near = _jobs(spark, "sssp-near", lambda: sssp_csr(g, source=1))
+    j_far, r_far = _jobs(spark, "sssp-far", lambda: sssp_csr(g, source=5))
+    assert r_near.supersteps < r_far.supersteps
+    assert j_near == j_far > 0
+    g.unpersist()
+
+
+def test_csr_result_contract(spark):
+    """Every CSR kernel reports one metric per superstep, the halting metric
+    of its last one, and a JSON-serializable ``converged``."""
+    g = Graph(edges_from_pairs(spark, GRAPH_MAIN), num_partitions=4)
+    tol = 1e-8
+    pr = pagerank_csr(g, mode="convergence", tol=tol)
+    sp = sssp_csr(g, source=1)
+    cc = cc_csr(g)
+    for res in (pr, sp, cc):
+        assert len(res.metrics) == res.supersteps > 0
+        assert type(res.converged) is bool and res.converged
+        assert [m.superstep for m in res.metrics] == list(range(1, res.supersteps + 1))
+    assert pr.metrics[-1].delta < tol
+    assert sp.metrics[-1].changed == 0 and cc.metrics[-1].changed == 0
     g.unpersist()
