@@ -248,20 +248,17 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "stats":
             from sparkgraph.algorithms import connected_components
 
-            degs = g.degrees.agg(
-                F.count(F.lit(1)).alias("v"),
-                F.max("deg").alias("max_deg"),
-                F.avg("deg").alias("avg_deg"),
-            ).collect()[0]
+            max_deg = g.degrees.agg(F.max("deg")).collect()[0][0]
             n_comp = (
                 connected_components(g).state.select("component").distinct().count()
             )
+            nv = g.num_vertices
             print(json.dumps({
-                "n_vertices": degs["v"],
+                "n_vertices": nv,
                 "n_input_edges": g.edges.count(),
-                "n_sym_edges": g.edges_sym.count(),
-                "max_degree": degs["max_deg"],
-                "avg_degree": round(degs["avg_deg"], 3),
+                "n_sym_edges": g.num_sym_edges,
+                "max_degree": max_deg,
+                "avg_degree": round(g.num_sym_edges / nv, 3) if nv else None,
                 "n_components": n_comp,
             }))
             return 0

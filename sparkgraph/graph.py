@@ -7,10 +7,16 @@ onto persisted, hash-partitioned DataFrames:
     worker/worker.go:164-199): every input edge emitted in BOTH directions,
     duplicates KEPT. Persisted and pre-partitioned by ``src`` so the
     per-superstep scatter join never reshuffles the (large) edge side.
+  * ``degrees`` — out-degree on the symmetrized view (counts parallel edges),
+    the divisor of PageRank's scatter (worker/pagerank.go:37-43). One
+    aggregate over the cached ``edges_sym``, already partitioned by ``src``,
+    so it adds no shuffle.
   * ``vertices`` — distinct endpoint ids (operator A11,
     worker/worker.go:146-147): vertices exist only if they appear in ≥1 edge.
-  * ``degrees`` — out-degree on the symmetrized view (counts parallel edges),
-    the divisor of PageRank's scatter (worker/pagerank.go:37-43).
+    After symmetrization every endpoint is a ``src``, so these are the keys
+    of ``degrees``; and ``num_vertices`` / ``num_sym_edges`` are its row
+    count and ``sum(deg)``, read by one aggregate. Building a graph thus
+    scans the input once and shuffles once (the ``repartition(src)``).
 
 At cluster scale the partition count should be sized so each edge partition
 fits comfortably in executor memory; AQE coalesces the shuffle side.
@@ -42,9 +48,8 @@ class Graph:
         self.num_partitions = num_partitions
         self._persist = persist
         self._edges_sym: DataFrame | None = None
-        self._vertices: DataFrame | None = None
         self._degrees: DataFrame | None = None
-        self._num_vertices: int | None = None
+        self._counts: tuple[int, int] | None = None
 
     # -- derived views ----------------------------------------------------
 
@@ -69,21 +74,6 @@ class Graph:
         return self._edges_sym
 
     @property
-    def vertices(self) -> DataFrame:
-        """(id: long) — every distinct endpoint (A11)."""
-        if self._vertices is None:
-            v = (
-                self.edges.select(F.col("src").alias("id"))
-                .unionByName(self.edges.select(F.col("dst").alias("id")))
-                .distinct()
-                .repartition(self.num_partitions, F.col("id"))
-            )
-            if self._persist:
-                v = v.persist(StorageLevel.MEMORY_AND_DISK)
-            self._vertices = v
-        return self._vertices
-
-    @property
     def degrees(self) -> DataFrame:
         """(id: long, deg: long) — symmetrized out-degree, parallel edges count.
 
@@ -100,6 +90,12 @@ class Graph:
         return self._degrees
 
     @property
+    def vertices(self) -> DataFrame:
+        """(id: long) — every distinct endpoint (A11): the keys of ``degrees``,
+        hash-partitioned on ``id`` like it."""
+        return self.degrees.select("id")
+
+    @property
     def weighted_degrees(self) -> DataFrame:
         """(id, wdeg: double) — sum of outgoing edge weights on the
         symmetrized view (== degrees when all weights are 1.0)."""
@@ -107,11 +103,24 @@ class Graph:
             F.sum("weight").alias("wdeg")
         )
 
+    def _count(self) -> tuple[int, int]:
+        """(|V|, symmetrized edge count) from one aggregate over ``degrees``."""
+        if self._counts is None:
+            row = self.degrees.agg(
+                F.count(F.lit(1)), F.coalesce(F.sum("deg"), F.lit(0))
+            ).collect()[0]
+            self._counts = (int(row[0]), int(row[1]))
+        return self._counts
+
     @property
     def num_vertices(self) -> int:
-        if self._num_vertices is None:
-            self._num_vertices = self.vertices.count()
-        return self._num_vertices
+        return self._count()[0]
+
+    @property
+    def num_sym_edges(self) -> int:
+        """Rows of ``edges_sym``: twice the input edges, parallel edges and
+        self-loops included."""
+        return self._count()[1]
 
     # -- helpers -----------------------------------------------------------
 
@@ -130,7 +139,7 @@ class Graph:
         )
 
     def unpersist(self) -> None:
-        for df in (self._edges_sym, self._vertices, self._degrees):
+        for df in (self._edges_sym, self._degrees):
             if df is not None:
                 df.unpersist()
         # release the session-cached CSR pack built over this graph, if any

@@ -105,10 +105,9 @@ class PackedGraph:
         if self.n == 0:
             raise ValueError("graph has no vertices")
         self.check_envelope(max_broadcast_vertices)
-        n_edges = graph.edges_sym.count()
-        self.parts = max(
-            1, min(graph.num_partitions, -(-n_edges // PACK_EDGES_PER_PARTITION))
-        )
+        self.parts = max(1, min(
+            graph.num_partitions, -(-graph.num_sym_edges // PACK_EDGES_PER_PARTITION)
+        ))
         # coalesce, NOT repartition: the kernels combine messages per
         # destination over ANY edge grouping, so the pack needs no src-hash
         # shuffle at all — a narrow merge of the already-persisted edges_sym

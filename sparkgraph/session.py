@@ -10,6 +10,7 @@ retry replaces the gossip failure detector.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -25,6 +26,14 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
     ``shuffle_partitions`` defaults to the core count — at cluster scale this
     is superseded by AQE coalescing, which is enabled.
+
+    In local mode, when the Python workers can import ``sparkgraph`` (its
+    root is the working directory, on ``PYTHONPATH`` or in site-packages),
+    ``spark.python.daemon.module`` is ``sparkgraph.worker_daemon``: the
+    stock daemon with Python 3.11's per-task re-read of Spark's archive
+    directories switched off, which cut a one-task Python job 92 → 60 ms on
+    a 4-core VM (see that module). Workers that could not import it would fail every
+    Python UDF, so other masters keep ``pyspark.daemon``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -85,6 +94,8 @@ def get_spark(
                 local_dir = None
         if local_dir:
             builder = builder.config("spark.local.dir", local_dir)
+        if _workers_import_sparkgraph():
+            builder = builder.config("spark.python.daemon.module", "sparkgraph.worker_daemon")
     # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — ad-hoc conf injection for the
     # evidence scripts (e.g. spark.io.compression.codec=zstd halves the
     # on-disk shuffle footprint of id-pair-heavy single-box runs)
@@ -97,6 +108,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _workers_import_sparkgraph() -> bool:
+    """Whether a local Python worker — started by ``python -m`` in the JVM's
+    working directory (this process's) with this process's ``PYTHONPATH`` —
+    finds the ``sparkgraph`` package that is running here. A package loaded
+    from a ``--py-files`` archive is not on a worker's path until its first
+    task, so it does not count."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isdir(root):
+        return False
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+             *site.getsitepackages()]
+    return any(p and os.path.realpath(p) == os.path.realpath(root) for p in paths)
 
 
 def stop_spark(spark: SparkSession) -> None:
