@@ -13,7 +13,7 @@ Taylor prefix of (I − αAᵀ)⁻¹β𝟙. Convergence of the full series needs
 gate pins. Same scatter/gather plan shape as pagerank: persisted
 pre-partitioned symmetrized edges never re-exchange; state builds the hash
 side (``hint("shuffle_hash")``); per-superstep map-side partial aggregation;
-lineage truncated eagerly every superstep, as in pagerank.
+the supersteps run in ``SuperstepLoop.propagate``, as pagerank's do.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import PregelResult, SuperstepLoop, truncate_lineage
+from sparkgraph.pregel import PregelResult, SuperstepLoop
 
 
 def katz_centrality(
@@ -36,24 +36,17 @@ def katz_centrality(
     n = graph.num_vertices
     if n == 0:
         raise ValueError("graph has no vertices (empty or comment-only input)")
-    edges = graph.edges_sym
     loop = SuperstepLoop(
         "katz", {"alpha": alpha, "beta": beta, "iterations": iterations}
     )
-    state = truncate_lineage(
-        graph.vertices.select("id", F.lit(0.0).alias("value"))
+    step, state = loop.start(
+        graph.vertices.select("id", F.lit(0.0).alias("value")), graph.num_partitions
     )
     # built once, as in pagerank; every vertex gets a message along each of
     # its edges, so the aggregate is the whole new state
     scatter = [F.col("id").alias("src"), "value"]
-    dst_as_id = F.col("dst").alias("id")
     update = (F.lit(beta) + F.lit(alpha) * F.sum("value")).alias("value")
-    step = 0
-    while step < iterations:
-        loop.step_started()
-        step += 1
-        msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
-        # eager, every superstep (see pagerank)
-        state = truncate_lineage(msgs.groupBy(dst_as_id).agg(update))
-        loop.step_done(state, step)
-    return loop.finish(state, step, True, result=state.select("id", "value"))
+    state, step, converged = loop.propagate(
+        graph.edges_sym, state, step, iterations, scatter, [update], None
+    )
+    return loop.finish(state, step, converged, result=state.select("id", "value"))

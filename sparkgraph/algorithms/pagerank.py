@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import Checkpointer, PregelResult, SuperstepLoop, truncate_lineage
+from sparkgraph.pregel import Checkpointer, PregelResult, SuperstepLoop, warn_unconverged
 
 
 def pagerank(
@@ -44,21 +44,16 @@ def pagerank(
     damping: float = 0.85,
     checkpointer: Checkpointer | None = None,
     resume: bool = False,
-    salting_threshold: int | None = None,
-    salts: int = 16,
     reset_to: int | None = None,
     weighted: bool = False,
     initial_state: DataFrame | None = None,
 ) -> PregelResult:
     """Returns state ``(id, value)``; ``result.metrics`` carries per-superstep
-    wall time and (in convergence mode) the max-abs delta. Every superstep
-    ends in an eager lineage truncation, so it runs as one Spark job and its
-    ``metrics.seconds`` is its execution time.
-
-    ``salting_threshold``: when set, gathers for vertices whose symmetrized
-    degree exceeds it run through the explicit two-phase salted aggregation
-    (sparkgraph.skew) instead of the single-phase groupBy — the escape hatch
-    for hub skew beyond what map-side partial aggregation + AQE absorb.
+    wall time and (in convergence mode) the max-abs delta. The supersteps run
+    in ``SuperstepLoop.propagate``: one Spark job each, the delta's in
+    convergence mode. A convergence run that stops at ``max_iter`` above
+    ``tol`` logs the convergence-guard warning and returns
+    ``converged=False``.
 
     ``reset_to``: personalized PageRank — the teleport mass (1−damping) lands
     entirely on this vertex instead of uniformly on all N (random walk with
@@ -86,7 +81,6 @@ def pagerank(
         teleport_col = F.when(
             F.col("id") == reset_to, F.lit(1.0 - damping)
         ).otherwise(F.lit(0.0))
-    edges = graph.edges_sym
 
     loop = SuperstepLoop(
         "pagerank",
@@ -126,57 +120,16 @@ def pagerank(
     ]
     # Apply (A8): damped update.
     apply = ["id", "deg", (teleport_col + F.lit(damping) * F.col("msum")).alias("value")]
-    dst_as_id = F.col("dst").alias("id")
-    prev = ["id", F.col("value").alias("prev")]
-    max_delta = F.max(F.abs(F.col("value") - F.col("prev")))
-
-    hubs = None
-    converged = False
-    try:
-        if salting_threshold is not None:
-            from sparkgraph.skew import salted_message_sum, top_degree_hubs
-
-            hubs = top_degree_hubs(graph.degrees, salting_threshold).persist()
-            hubs.count()
-        while step < (iterations if mode == "reference" else max_iter):
-            loop.step_started()
-            step += 1
-
-            # shuffle-hash: build on the (small) state side, stream the
-            # persisted pre-partitioned edge side without re-sorting it
-            msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
-            if hubs is None:
-                new_state = msgs.groupBy(dst_as_id).agg(*gather).select(*apply)
-            else:
-                sums = salted_message_sum(
-                    msgs.select("dst", msg.alias("msg")), hubs, salts=salts
-                )
-                new_state = state.join(sums, "id").select(*apply)
-            # Eager truncation every superstep. The state keeps its hash
-            # partitioning on id, so the gather is the superstep's only
-            # shuffle. Lazy cuts every second superstep run fewer jobs but
-            # are slower: the untruncated state is computed twice.
-            new_state = truncate_lineage(new_state)
-
-            delta = None
-            if mode == "convergence":
-                # both states are hash-partitioned on id: no exchange
-                delta = (
-                    new_state.join(state.select(*prev).hint("shuffle_hash"), "id")
-                    .agg(max_delta)
-                    .collect()[0][0]
-                )
-            state = new_state
-            loop.step_done(state, step, delta=delta)
-            if mode == "convergence" and delta is not None and delta < tol:
-                converged = True
-                break
-    finally:
-        if hubs is not None:
-            hubs.unpersist()
-
-    if mode == "reference":
-        converged = True  # fixed-iteration contract fulfilled
+    delta = None
+    if mode == "convergence":
+        prev = ["id", F.col("value").alias("prev")]
+        delta = (prev, F.max(F.abs(F.col("value") - F.col("prev"))), tol)
+    rounds = iterations if mode == "reference" else max_iter
+    state, step, converged = loop.propagate(
+        graph.edges_sym, state, step, rounds, scatter, gather, apply, delta
+    )
+    if not converged:
+        warn_unconverged(loop.algorithm, step, max_iter)
     return loop.finish(state, step, converged, result=state.select("id", "value"))
 
 
@@ -208,9 +161,7 @@ def ppr_batch(
     against ``graph.vertices`` first if typo'd ids must be caught."""
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = graph.spark
-    edges = graph.edges_sym
-    seeds = spark.createDataFrame(
+    seeds = graph.spark.createDataFrame(
         [(int(s),) for s in sorted(set(sources))], "seed long"
     )
     state = graph.degrees.crossJoin(F.broadcast(seeds)).select(
@@ -232,10 +183,9 @@ def ppr_batch(
         F.count(F.lit(1)).cast("double").alias("deg"),
         (teleport + F.lit(damping) * F.sum("contrib")).alias("value"),
     ]
-    for _ in range(iterations):
-        msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
-        # eager, every superstep (see pagerank)
-        state = truncate_lineage(msgs.groupBy(*key).agg(*gather))
+    state, _, _ = SuperstepLoop("ppr_batch").propagate(
+        graph.edges_sym, state, 0, iterations, scatter, gather, None, key=key
+    )
     return state.select("seed", "id", "value")
 
 

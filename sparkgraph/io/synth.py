@@ -30,10 +30,6 @@ _IMPORT_FMT = {
 }
 
 
-def lang_of(file_idx: int) -> str:
-    return LANGS[file_idx % len(LANGS)]
-
-
 def import_targets(file_idx: int, repo_idx: int, files_per_repo: int, k: int) -> list[int]:
     """Closed-form import target indices for file f of repo r (k imports)."""
     step = repo_idx % 5 + 1

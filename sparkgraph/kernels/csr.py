@@ -248,6 +248,8 @@ def pagerank_csr(
         SuperstepMetrics(superstep=i + 1, seconds=round(s, 6), delta=d if convergence else None)
         for i, (s, d) in enumerate(zip(seconds, deltas))
     ]
+    if convergence and not done:
+        warn_unconverged("pagerank_csr", len(metrics), max_iter)
     return PregelResult(state=_state_frame(pg, "value", x), supersteps=len(metrics),
                         converged=done or not convergence, metrics=metrics)
 

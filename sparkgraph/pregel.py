@@ -1,5 +1,5 @@
 """Superstep driver: lineage truncation, metrics, checkpoint/resume and the
-frontier fixpoint loop.
+two superstep loops.
 
 Replaces the reference's hand-rolled BSP runtime (SURVEY.md §2A A9/A10, §2B
 B7/B8): the master's ACK-counted barrier (master/master.go:404-450) becomes a
@@ -12,10 +12,13 @@ JSON manifest carrying per-partition lineage and convergence metrics
 
 The reference writes its vertex programs against one ``Vertex`` API
 (api/api.go:9-22). Here ``SuperstepLoop.start`` is the one resume-or-init
-step of every checkpointable loop, and ``SuperstepLoop.relax`` is the one
-frontier fixpoint (the shape of GraphX ``aggregateMessages``): SSSP, CC,
-temporal reachability and DAG layering supply only their scatter, gather
-and apply ``Column``s.
+step of every checkpointable loop, and two loops take the shape of GraphX
+``aggregateMessages``: ``SuperstepLoop.relax``, the frontier fixpoint of
+SSSP, CC, temporal reachability and DAG layering, and
+``SuperstepLoop.propagate``, the fixed-round or converge-to-``tol`` loop
+whose gathered aggregate is the new state (PageRank in every mode, Katz,
+``ppr_batch``). Each algorithm supplies only its scatter, gather and apply
+``Column``s.
 """
 
 from __future__ import annotations
@@ -211,9 +214,13 @@ class SuperstepLoop:
     """Bookkeeping shared by all iterative algorithms: wall-clock per
     superstep, optional convergence deltas, checkpoint writes and resume
     (A9/A10). ``start`` resumes or initializes a loop's state; ``relax`` runs
-    the frontier fixpoint for min/max-relaxation loops. Loops of another
-    shape (PageRank's fused gather, LPA's two-level vote, the multi-consumer
-    loops) keep their own superstep and call ``step_started``/``step_done``.
+    the frontier fixpoint for min/max-relaxation loops; ``propagate`` runs
+    the loops whose ``groupBy`` aggregate is the whole new state. Loops of
+    another shape keep their own superstep and call
+    ``step_started``/``step_done``: LPA's two-level vote, the multi-consumer
+    loops, HITS (two half-steps a superstep, each with a left-join apply and
+    a normalization collect) and feature propagation (a lazy,
+    self-inclusive union of the state and its messages).
     """
 
     def __init__(
@@ -304,6 +311,58 @@ class SuperstepLoop:
             if changed == 0:
                 return state, step, True
         return state, step, False
+
+    def propagate(
+        self, edges: DataFrame, state: DataFrame, step: int, rounds: int,
+        scatter: list, gather: list, apply: list | None,
+        delta: tuple[list, Column, float] | None = None, key: list | None = None,
+    ) -> tuple[DataFrame, int, bool]:
+        """Supersteps from ``step`` up to ``rounds`` where the gathered
+        aggregate IS the new state: (state, supersteps, converged).
+        ``edges`` is partitioned on ``src``.
+
+        Each superstep, the whole state selects ``scatter`` (naming ``src``)
+        and joins ``edges`` on ``src``; ``gather`` aggregates the joined rows
+        by ``key`` (default ``dst AS id``) and ``apply``, when given, selects
+        the new state from that aggregate. A vertex with no incoming message
+        drops out of the state, so the caller's messages must reach every
+        vertex (on the symmetrized graph each vertex messages itself back).
+
+        ``delta=(prev, measure, tol)`` halts the loop once ``measure`` —
+        aggregated over the new state joined on ``id`` with the old one's
+        ``prev`` columns — falls below ``tol``; ``converged`` says whether it
+        did. Without it the loop runs its ``rounds`` and counts as converged.
+
+        The truncation is eager, so a superstep is one Spark job, unless a
+        delta follows: then it is lazy and the delta's action materializes
+        the checkpoint, as in ``relax``. Under the default ``key`` the state
+        keeps its hash partitioning on ``id``, so the gather is the
+        superstep's only shuffle."""
+        key = key or [F.col("dst").alias("id")]
+        while step < rounds:
+            self.step_started()
+            # shuffle-hash: build on the (small) state side, stream the
+            # persisted pre-partitioned edge side without re-sorting it
+            msgs = edges.join(state.select(*scatter).hint("shuffle_hash"), "src")
+            new_state = msgs.groupBy(*key).agg(*gather)
+            if apply is not None:
+                new_state = new_state.select(*apply)
+            new_state = truncate_lineage(new_state, eager=delta is None)
+            d = None
+            if delta is not None:
+                prev, measure, tol = delta
+                # both states are hash-partitioned on id: no exchange
+                d = (
+                    new_state.join(state.select(*prev).hint("shuffle_hash"), "id")
+                    .agg(measure)
+                    .collect()[0][0]
+                )
+            state = new_state
+            step += 1
+            self.step_done(state, step, delta=d)
+            if d is not None and d < tol:
+                return state, step, True
+        return state, step, delta is None
 
     def step_started(self) -> None:
         self._t0 = time.monotonic()

@@ -123,8 +123,3 @@ def _workers_import_sparkgraph() -> bool:
              *site.getsitepackages()]
     return any(p and os.path.realpath(p) == os.path.realpath(root) for p in paths)
 
-
-def stop_spark(spark: SparkSession) -> None:
-    spark.stop()
-    # Allow a fresh master (e.g. a different local[N]) in the same process.
-    SparkSession.builder._options = {}

@@ -93,11 +93,6 @@ def char_ngram_fingerprint(
     )
 
 
-def sha_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Content fingerprint: sha256 hex per row (mirrors ingest's invariant)."""
-    return df.withColumn("content_sha", F.sha2(F.col(text_col), 256))
-
-
 def exact_dedup(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

@@ -1,5 +1,6 @@
 """PageRank vs numpy-free pure-Python oracle (FIXTURES.md §4)."""
 
+import logging
 import math
 
 import pytest
@@ -7,6 +8,7 @@ import pytest
 from sparkgraph.algorithms import pagerank, top_k
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
+from sparkgraph.kernels.csr import pagerank_csr
 
 from tests.fixtures import GRAPH_CHAIN, GRAPH_DOUBLED, GRAPH_MAIN
 from tests.oracles import pagerank_oracle
@@ -51,6 +53,20 @@ def test_convergence_mode(spark):
     assert all(math.isclose(got[v], want[v], abs_tol=1e-6) for v in want)
     # Damped PR on a graph with no dangling mass sums to 1 at the fixpoint.
     assert math.isclose(sum(got.values()), 1.0, abs_tol=1e-6)
+
+
+@pytest.mark.parametrize("kernel", [pagerank, pagerank_csr], ids=["relational", "csr"])
+def test_unconverged_convergence_mode_warns(spark, caplog, kernel):
+    g = Graph(edges_from_pairs(spark, GRAPH_MAIN), num_partitions=4)
+    with caplog.at_level(logging.WARNING, logger="sparkgraph"):
+        res = kernel(g, mode="convergence", tol=1e-12, max_iter=3)
+    assert not res.converged and res.supersteps == 3
+    assert any("max_iter ceiling" in r.message for r in caplog.records)
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="sparkgraph"):
+        assert kernel(g, mode="reference", iterations=3).converged
+    assert not any("ceiling" in r.message for r in caplog.records)
+    g.unpersist()
 
 
 def test_modes_agree_at_fixpoint(spark):

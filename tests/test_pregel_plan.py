@@ -2,8 +2,9 @@
 partitioning on ``id``, so the ``groupBy`` gather is a superstep's only
 shuffle, PageRank's state comes straight out of that gather (its scatter is
 its only join), and truncation leaves the caller's AQE setting as it found
-it. ``SuperstepLoop.start`` and ``SuperstepLoop.relax`` truncate inside
-``sparkgraph.pregel``, so the plans are recorded there."""
+it. ``SuperstepLoop.start``, ``SuperstepLoop.relax`` and
+``SuperstepLoop.propagate`` truncate inside ``sparkgraph.pregel``, so the
+plans are recorded there."""
 
 import math
 from importlib import import_module
@@ -11,8 +12,11 @@ from importlib import import_module
 import pytest
 from pyspark.sql import functions as F
 
-from sparkgraph.algorithms import connected_components, label_propagation, pagerank, sssp
+from sparkgraph.algorithms import (
+    connected_components, katz_centrality, label_propagation, pagerank, sssp,
+)
 from sparkgraph.algorithms.dag import longest_path_layers
+from sparkgraph.algorithms.pagerank import ppr_batch
 from sparkgraph.algorithms.temporal import temporal_earliest_arrival
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
@@ -23,7 +27,6 @@ from tests.oracles import pagerank_oracle
 
 AQE = "spark.sql.adaptive.enabled"
 # the package re-exports the functions under the modules' names
-pagerank_mod = import_module("sparkgraph.algorithms.pagerank")
 lpa_mod = import_module("sparkgraph.algorithms.lpa")
 pregel_mod = import_module("sparkgraph.pregel")
 
@@ -83,18 +86,40 @@ def test_truncated_state_reports_hash_partitioning_on_id(graph):
 
 
 def test_pagerank_superstep_has_one_exchange_keyed_on_dst(graph, monkeypatch):
+    warm = pagerank(graph, iterations=1).state
     for kwargs in (
         {"mode": "reference", "iterations": 1},
         {"mode": "reference", "iterations": 1, "weighted": True},
         {"mode": "convergence", "max_iter": 1},
+        {"mode": "reference", "iterations": 1, "reset_to": 1},
+        {"mode": "convergence", "max_iter": 1, "initial_state": warm},
     ):
-        seen = _recording(monkeypatch, pregel_mod, pagerank_mod)
+        seen = _recording(monkeypatch, pregel_mod)
         pagerank(graph, **kwargs)
         assert len(seen) == 2, kwargs  # initial state, superstep 1
         # the scatter is the only join: the new state is the gather's output
         assert _joins(seen[1]) == ["ShuffledHashJoinExec"], kwargs
         (exchange,) = _exchanges(seen[1])
         assert exchange.startswith("hashpartitioning(dst#"), kwargs
+
+
+@pytest.mark.parametrize(
+    "run, cut, keys",
+    [
+        (lambda g: katz_centrality(g, iterations=1), 1, ["dst"]),
+        # The cross-join init is not truncated, so superstep 2 is the pin. The
+        # state is keyed (seed, id), so the scatter join re-exchanges it on src.
+        (lambda g: ppr_batch(g, [1, 2], iterations=2), 1, ["seed", "src"]),
+    ],
+    ids=["katz", "ppr_batch"],
+)
+def test_propagate_superstep_has_one_join(graph, monkeypatch, run, cut, keys):
+    graph.edges_sym.count()
+    seen = _recording(monkeypatch, pregel_mod)
+    run(graph)
+    assert _joins(seen[cut]) == ["ShuffledHashJoinExec"]
+    exchanges = _exchanges(seen[cut])
+    assert sorted(e[len("hashpartitioning("):].split("#")[0] for e in exchanges) == keys
 
 
 def _temporal(g):
