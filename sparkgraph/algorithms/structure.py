@@ -108,19 +108,15 @@ def local_clustering(graph: Graph) -> DataFrame:
     """Per-vertex local clustering coefficient ``(id, triangles, lcc)``:
     lcc(v) = triangles(v) / C(deg v, 2), 0 when deg < 2.
 
-    Triangles are enumerated once each on the DEGREE-ORIENTED edge set
-    (oriented out-degree is O(√E), so the wedge join never explodes on hubs —
-    same plan discipline as triangle_count's intersect path), then every
-    triangle credits its three corners. Per-vertex counts are orientation-
-    independent, so the oracle can enumerate on the simpler canonical u<v
-    orientation and agree exactly."""
-    from sparkgraph.algorithms.triangles import oriented_edges
+    Triangles come once each from the degree-oriented enumeration
+    (``triangles._triangles``: oriented out-degree is O(√E), so the wedge
+    join never explodes on hubs), then every triangle credits its three
+    corners. Per-vertex counts are orientation-independent, so the oracle
+    can enumerate on the simpler canonical u<v orientation and agree
+    exactly."""
+    from sparkgraph.algorithms.triangles import _triangles
 
-    o = oriented_edges(graph)
-    ab = o.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
-    bc = o.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
-    ac = o.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = ab.join(bc, "tb").join(ac, ["ta", "tc"])
+    tri = _triangles(graph.simple_undirected())
     corners = (
         tri.select(F.col("ta").alias("id"))
         .unionByName(tri.select(F.col("tb").alias("id")))

@@ -1,36 +1,38 @@
-"""Exact triangle counting via degree-ordered orientation + 2-path join.
+"""Exact triangles over one degree-ordered orientation.
 
 The reference has no triangle program (SURVEY.md §2C). Definition: number of
 distinct vertex triples {a,b,c} mutually adjacent in the SIMPLE undirected
 graph — the loader's parallel edges and self-loops are deduplicated first
 (documented dedup step, FIXTURES.md §4).
 
-Algorithm (standard for skewed/web-scale graphs — avoids the hub blow-up of
-a naive 2-path join, SURVEY.md §7 risk (iii)): orient every undirected edge
-from the endpoint with smaller (degree, id) to the larger. The oriented graph
-is acyclic with max out-degree O(√E), so the wedge join is bounded even on
-power-law graphs. Each triangle is counted exactly once, at its lowest-degree
-apex:
+``oriented_edges`` points every simple edge from the endpoint with smaller
+(degree, id) to the larger. The oriented graph is acyclic with max
+out-degree O(√E), so no per-vertex join or list blows up on power-law hubs
+(SURVEY.md §7 risk (iii)), and each triangle has exactly one corner whose
+two out-edges close it:
 
-    triangles = |{(a,b,c) : a→b, b→c, a→c oriented edges}|
+    triangles = {(a,b,c) : a→b, b→c, a→c oriented edges}
+
+``_triangles`` is the one enumeration (ab ⋈ bc ⋈ ac); ``triangle_list``,
+``four_clique_count``, ``structure.local_clustering`` and ``k_truss`` read
+it. ``triangle_count`` only counts, so it never materializes the triangles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
 
+# Largest vertex count the bitset kernel takes: its n×n bit matrix is then
+# at most 32 MB, broadcast to every executor.
+BITSET_MAX_VERTICES = 16_384
 
-def oriented_edges(graph: Graph, simple: DataFrame | None = None) -> DataFrame:
-    """Simple edges oriented by (degree, id): (a → b) with rank(a) < rank(b).
 
-    ``simple``: optional precomputed (ideally persisted) simple_undirected
-    view, so callers that already materialized it don't recompute the
-    dedup+degree pipeline."""
-    if simple is None:
-        simple = graph.simple_undirected()  # (u < v, deduped, no loops)
+def oriented_edges(simple: DataFrame) -> DataFrame:
+    """Canonical simple ``(u < v)`` edges oriented by (degree, id):
+    ``(a → b)`` with rank(a) < rank(b)."""
     deg = (
         simple.select(F.col("u").alias("id"))
         .unionByName(simple.select(F.col("v").alias("id")))
@@ -49,82 +51,74 @@ def oriented_edges(graph: Graph, simple: DataFrame | None = None) -> DataFrame:
     )
 
 
-def triangle_count(graph: Graph, strategy: str = "auto") -> int:
-    """Physical strategies (same exact count):
+def _triangles(simple: DataFrame) -> DataFrame:
+    """Canonical simple ``(u < v)`` edges → one row ``(ta, tb, tc)`` per
+    triangle, its corners in increasing (degree, id) rank."""
+    o = oriented_edges(simple)
+    ab = o.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
+    bc = o.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
+    ac = o.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
+    return ab.join(bc, "tb").join(ac, ["ta", "tc"])
 
-    * 'bitset'    — broadcast the oriented adjacency as a packed bit matrix
-      and popcount row-AND per edge in a vectorized Arrow kernel. The matrix
-      is built DISTRIBUTIVELY: per-partition partial matrices on executors,
-      tree-OR merged, so the driver never sees an edge row. The right plan
-      for DENSE vertex sets (n ≤ ~16k: matrix ≤ 32 MB); turns the 10⁸
-      wedge explosion of a near-complete graph into a few hundred MB of
-      bitwise ops.
-    * 'intersect' — per-edge sorted-adjacency intersection; never shuffles
-      the wedge set, only E rows carrying O(√E) neighbor arrays. The scale
-      path for sparse/skewed graphs with many vertices.
-    * 'wedge'     — classic 2-path join + closing-edge semi-join.
-    * 'auto'      — bitset when the vertex count fits the broadcast matrix,
-      else intersect.
+
+def triangle_count(graph: Graph) -> int:
+    """Exact triangle count of the simple undirected graph.
+
+    One pass collects at most ``BITSET_MAX_VERTICES + 1`` distinct vertex
+    ids and picks the path:
+
+    * at most ``BITSET_MAX_VERTICES`` vertices — the bitset kernel: the
+      oriented adjacency becomes a packed bit matrix (built per partition on
+      the executors and OR-merged there, so no edge row is collected),
+      broadcast, and each oriented edge popcounts the AND of its two
+      rows in a vectorized Arrow kernel. On dense vertex sets this replaces
+      a wedge join of ~10⁸ rows with a few hundred MB of bitwise ops;
+    * otherwise — each oriented edge (a, b) counts the common members of
+      the oriented out-neighbor lists of a and b. This shuffles E rows
+      carrying O(√E) lists, never the wedge set, and measured faster than
+      counting the rows of ``_triangles``.
     """
-    # One persisted simple view feeds the auto-strategy vertex count, the
-    # degree computation AND the orientation — previously each derived it
-    # from scratch (3× the dedup pipeline per call). Measured: 5.6s → 3.6s
-    # on the supplier graph (guide §1.2: don't compute things twice).
+    import numpy as np
+
     simple = graph.simple_undirected().persist()
+    o = oriented_edges(simple).persist()
     try:
-        if strategy == "auto":
-            n = simple.select(F.explode(F.array("u", "v"))).distinct().count()
-            strategy = "bitset" if n <= 16384 else "intersect"
-        if strategy == "bitset":
-            return _triangle_count_bitset(graph, simple)
-        if strategy == "wedge":
-            o = oriented_edges(graph, simple).persist()
-            try:
-                e1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-                e2 = o.select(F.col("a").alias("y"), F.col("b").alias("z"))
-                wedges = e1.join(e2, "y").select("x", "z")
-                closing = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-                return wedges.join(closing, ["x", "z"]).count()
-            finally:
-                o.unpersist()
-        if strategy != "intersect":
-            raise ValueError(f"unknown strategy {strategy!r}")
-        o = oriented_edges(graph, simple).persist()
-        try:
-            # oriented out-neighbor lists: bounded by O(sqrt E) per vertex
-            adj = o.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
-            ea = adj.select(F.col("a").alias("_a"), F.col("nbrs").alias("na"))
-            eb = adj.select(F.col("a").alias("_b"), F.col("nbrs").alias("nb"))
-            per_edge = (
-                o.join(ea, o.a == ea._a)
-                .join(eb, o.b == eb._b)
-                .select(F.size(F.array_intersect("na", "nb")).alias("t"))
-            )
-            row = per_edge.agg(F.sum("t").alias("triangles")).collect()[0]
-            return int(row.triangles or 0)
-        finally:
-            o.unpersist()
+        ids = [
+            r[0]
+            for r in simple.select(F.explode(F.array("u", "v")).alias("id"))
+            .distinct()
+            .limit(BITSET_MAX_VERTICES + 1)
+            .collect()
+        ]
+        if len(ids) > BITSET_MAX_VERTICES:
+            return _triangle_count_intersect(o)
+        return _triangle_count_bitset(
+            graph.spark, o, np.sort(np.array(ids, dtype=np.int64))
+        )
     finally:
+        o.unpersist()
         simple.unpersist()
 
 
-def _triangle_count_bitset(graph: Graph, simple: DataFrame | None = None) -> int:
+def _triangle_count_intersect(o: DataFrame) -> int:
+    adj = o.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
+    ea = adj.select(F.col("a").alias("_a"), F.col("nbrs").alias("na"))
+    eb = adj.select(F.col("a").alias("_b"), F.col("nbrs").alias("nb"))
+    per_edge = (
+        o.join(ea, o.a == ea._a)
+        .join(eb, o.b == eb._b)
+        .select(F.size(F.array_intersect("na", "nb")).alias("t"))
+    )
+    row = per_edge.agg(F.sum("t").alias("triangles")).collect()[0]
+    return int(row.triangles or 0)
+
+
+def _triangle_count_bitset(spark: SparkSession, o: DataFrame, ids) -> int:
+    """``o``: the oriented edges; ``ids``: their sorted vertex universe
+    (n ≤ 16k) — the only per-row data collected."""
     import numpy as np
     import pyarrow as pa
 
-    o = oriented_edges(graph, simple).persist()
-    # vertex universe: n ≤ 16k ids — the only per-row data the driver sees
-    ids = np.sort(
-        np.array(
-            [
-                r[0]
-                for r in o.select(F.explode(F.array("a", "b")).alias("id"))
-                .distinct()
-                .collect()
-            ],
-            dtype=np.int64,
-        )
-    )
     n = len(ids)
     width = (n + 7) // 8
 
@@ -151,29 +145,33 @@ def _triangle_count_bitset(graph: Graph, simple: DataFrame | None = None) -> int
             [pa.array([acc.tobytes()], type=pa.large_binary())], names=["m"]
         )
 
-    # build distributively (one partial matrix per partition, in parallel),
-    # OR-merge executor-side; the driver receives exactly one packed matrix
-    blobs = o.mapInArrow(partial_matrix, "m binary")
-    merged = blobs.repartition(1).mapInArrow(or_merge, "m binary").collect()
-    mat = np.frombuffer(merged[0].m, dtype=np.uint8).reshape(n, width)
-    bc = graph.spark.sparkContext.broadcast((ids, mat))
     popcnt = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(1)
+    bc = None
+    try:
+        # build distributively (one partial matrix per partition, in
+        # parallel), OR-merge executor-side; exactly one packed matrix is
+        # collected
+        blobs = o.mapInArrow(partial_matrix, "m binary")
+        merged = blobs.repartition(1).mapInArrow(or_merge, "m binary").collect()
+        mat = np.frombuffer(merged[0].m, dtype=np.uint8).reshape(n, width)
+        bc = spark.sparkContext.broadcast((ids, mat))
 
-    def kernel(batches):
-        ids_l, m = bc.value
-        for b in batches:
-            a_idx = np.searchsorted(ids_l, b.column("a").to_numpy(zero_copy_only=False))
-            b_idx = np.searchsorted(ids_l, b.column("b").to_numpy(zero_copy_only=False))
-            inter = np.bitwise_and(m[a_idx], m[b_idx])
-            t = int(popcnt[inter].sum())
-            yield pa.RecordBatch.from_arrays([pa.array([t], type=pa.int64())], names=["t"])
+        def kernel(batches):
+            ids_l, m = bc.value
+            for b in batches:
+                a_idx = np.searchsorted(ids_l, b.column("a").to_numpy(zero_copy_only=False))
+                b_idx = np.searchsorted(ids_l, b.column("b").to_numpy(zero_copy_only=False))
+                inter = np.bitwise_and(m[a_idx], m[b_idx])
+                t = int(popcnt[inter].sum())
+                yield pa.RecordBatch.from_arrays([pa.array([t], type=pa.int64())], names=["t"])
 
-    total = (
-        o.mapInArrow(kernel, "t long").agg(F.sum("t").alias("triangles")).collect()[0]
-    )
-    bc.destroy()
-    o.unpersist()
-    return int(total.triangles or 0)
+        total = (
+            o.mapInArrow(kernel, "t long").agg(F.sum("t").alias("triangles")).collect()[0]
+        )
+        return int(total.triangles or 0)
+    finally:
+        if bc is not None:
+            bc.destroy()
 
 
 def triangle_count_df(graph: Graph) -> DataFrame:
@@ -185,14 +183,10 @@ def triangle_count_df(graph: Graph) -> DataFrame:
 def triangle_list(graph: Graph) -> DataFrame:
     """Enumerate the triangles themselves — ``(x, y, z)`` with x < y < z, one
     row per triangle. The motif-mining twin of ``triangle_count`` (listings
-    feed clique search, support counting, subgraph features); same
-    degree-ordered orientation as the wedge strategy, so wedge volume is
-    O(E^1.5)-bounded and hub wedges never explode."""
-    o = oriented_edges(graph)
-    ab = o.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
-    bc = o.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
-    ac = o.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = ab.join(bc, "tb").join(ac, ["ta", "tc"])
+    feed clique search, support counting, subgraph features), read off
+    ``_triangles``, so wedge volume is O(E^1.5)-bounded and hub wedges never
+    explode."""
+    tri = _triangles(graph.simple_undirected())
     srt = F.array_sort(F.array("ta", "tb", "tc"))
     return tri.select(
         srt[0].alias("x"), srt[1].alias("y"), srt[2].alias("z")

@@ -6,12 +6,12 @@ standard cohesive-subgraph notion one step stronger than k-core (Cohen 2008).
 On a dependency graph it isolates genuinely interlocked module clusters
 where plain components/cores over-merge.
 
-Support is computed ONCE via degree-oriented triangle enumeration (oriented
-out-degree O(√E) — no hub wedge blow-up, the same discipline as
-triangle_count/local_clustering) and then maintained INCREMENTALLY: each
-peel round enumerates only the triangles incident to the edges dropped that
-round (one adjacency expansion + one semi-join, deduped per triangle) and
-decrements the support of their surviving member edges. Round cost is
+Support is computed ONCE from the shared degree-oriented triangle
+enumeration (``triangles._triangles``: oriented out-degree O(√E), no hub
+wedge blow-up) and then maintained INCREMENTALLY: each peel round
+enumerates only the triangles incident to the edges dropped that round (one
+adjacency expansion + one semi-join, deduped per triangle) and decrements
+the support of their surviving member edges. Round cost is
 O(affected wedges), not O(full triangle pass) — the bulk-peel drop sequence
 is identical to a full recount (support after the decrement equals a fresh
 count on the shrunken graph), so results are bit-equal round-by-round.
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sparkgraph.algorithms.triangles import _triangles
 from sparkgraph.graph import Graph
 from sparkgraph.pregel import PregelResult, SuperstepLoop, truncate_lineage
 
@@ -29,27 +30,7 @@ from sparkgraph.pregel import PregelResult, SuperstepLoop, truncate_lineage
 def _triangle_corner_edges(e: DataFrame) -> DataFrame:
     """Canonical (u<v) simple edge set → one row per (triangle, member edge):
     columns (u, v). Enumeration is degree-oriented; output edges canonical."""
-    deg = (
-        e.select(F.col("u").alias("x"))
-        .unionByName(e.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("dx"))
-    )
-    ed = (
-        e.join(deg.select(F.col("x").alias("u"), F.col("dx").alias("du")), "u")
-        .join(deg.select(F.col("x").alias("v"), F.col("dx").alias("dv")), "v")
-    )
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    o = ed.select(
-        F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    )
-    ab = o.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
-    bc = o.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
-    ac = o.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = ab.join(bc, "tb").join(ac, ["ta", "tc"])
+    tri = _triangles(e)
     return (
         tri.select(F.least("ta", "tb").alias("u"), F.greatest("ta", "tb").alias("v"))
         .unionByName(

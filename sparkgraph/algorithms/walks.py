@@ -86,7 +86,6 @@ def random_walks(
     graph: Graph,
     walk_len: int,
     mixer: str = "xxhash",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """One walk per vertex (walk_id = start id), ``walk_len`` hops on the
     simple undirected view. Returns the full trace
@@ -132,8 +131,7 @@ def random_walks(
         # Lazy (eager=False): the plan is cut now, each level's RDD computes
         # (and caches) exactly once at the terminal action — the whole walk
         # is ONE Spark job instead of one per hop.
-        if s % checkpoint_every == 0:
-            cur = truncate_lineage(cur, eager=False)
+        cur = truncate_lineage(cur, eager=False)
         levels.append(cur.select("walk_id", F.lit(s).alias("step"), "vertex"))
 
     out = levels[0]
@@ -146,7 +144,6 @@ def weighted_random_walks(
     graph: Graph,
     walk_len: int,
     mixer: str = "xxhash",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Edge-weight-proportional random walks for INTEGER-weighted graphs
     (e.g. co-change counts): each undirected pair's weight w (parallel edges
@@ -211,8 +208,7 @@ def weighted_random_walks(
         cur = picked.hint("shuffle_hash").join(adj, ["a_src", "a_idx"]).select(
             "walk_id", F.col("a_dst").alias("vertex"), F.col("a_ddeg").alias("deg")
         )
-        if s % checkpoint_every == 0:
-            cur = truncate_lineage(cur, eager=False)  # one job total, see random_walks
+        cur = truncate_lineage(cur, eager=False)  # one job total, see random_walks
         levels.append(cur.select("walk_id", F.lit(s).alias("step"), "vertex"))
 
     out = levels[0]
@@ -227,7 +223,6 @@ def node2vec_walks(
     p: float = 1.0,
     q: float = 1.0,
     mixer: str = "xxhash",
-    checkpoint_every: int = 1,
     max_degree: int | None = 100_000,
     weighted: bool = False,
 ) -> DataFrame:
@@ -472,8 +467,7 @@ def node2vec_walks(
             F.col("a_dst").alias("vertex"),
             F.col("a_wnext").alias("wnext"),
         )
-        if s % checkpoint_every == 0:
-            cur = truncate_lineage(cur, eager=False)  # one job total, see random_walks
+        cur = truncate_lineage(cur, eager=False)  # one job total, see random_walks
         levels.append(cur.select("walk_id", F.lit(s).alias("step"), "vertex"))
 
     out = levels[0]

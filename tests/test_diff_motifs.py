@@ -39,7 +39,7 @@ def test_triangle_list_matches_bruteforce(spark):
         got = {(r.x, r.y, r.z) for r in triangle_list(g).collect()}
         want = _tri_oracle(pairs)
         assert got == want, trial
-        assert len(got) == triangle_count(g, strategy="wedge")
+        assert len(got) == triangle_count(g)
         g.unpersist()
 
 

@@ -2,7 +2,10 @@
 
 import random
 
+import pytest
+
 from sparkgraph.algorithms import label_propagation, triangle_count
+from sparkgraph.algorithms import triangles as triangles_mod
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 
@@ -91,15 +94,55 @@ def test_triangles_parallel_edges_deduped(spark):
     g.unpersist()
 
 
+def _random_pairs(rng, n=12, m=25):
+    pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    return [(s, d) for s, d in pairs if s != d]
+
+
 def test_triangles_random_graphs_vs_bruteforce(spark):
     rng = random.Random(42)
     for trial in range(3):
-        n = 12
-        pairs = [
-            (rng.randrange(n), rng.randrange(n))
-            for _ in range(25)
-        ]
-        pairs = [(s, d) for s, d in pairs if s != d]
+        pairs = _random_pairs(rng)
         g = Graph(edges_from_pairs(spark, pairs), num_partitions=4)
         assert triangle_count(g) == triangles_oracle(pairs), f"trial {trial}: {pairs}"
         g.unpersist()
+
+
+def test_triangles_sparse_path_vs_bruteforce(spark, monkeypatch):
+    """Every fixture fits the bitset kernel's vertex ceiling; a ceiling of 0
+    sends them down the sparse (oriented-list intersection) path instead."""
+    monkeypatch.setattr(triangles_mod, "BITSET_MAX_VERTICES", 0)
+    rng = random.Random(42)
+    cases = [_random_pairs(rng) for _ in range(3)]
+    cases.append(GRAPH_DOUBLED + [(1, 3), (3, 1)])
+    for pairs in cases:
+        g = Graph(edges_from_pairs(spark, pairs), num_partitions=4)
+        assert triangle_count(g) == triangles_oracle(pairs), pairs
+        g.unpersist()
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize("ceiling", [triangles_mod.BITSET_MAX_VERTICES, 0])
+def test_triangle_count_releases_what_it_persists(spark, monkeypatch, ceiling):
+    monkeypatch.setattr(triangles_mod, "BITSET_MAX_VERTICES", ceiling)
+    g = Graph(edges_from_pairs(spark, GRAPH_MAIN_TRI), num_partitions=4)
+    before = _persisted_rdds(spark)
+    assert triangle_count(g) == 1
+    assert _persisted_rdds(spark) == before
+    g.unpersist()
+
+
+def test_triangle_count_bitset_releases_on_failure(spark, monkeypatch):
+    def fail(*args, **kwargs):
+        raise RuntimeError("broadcast failed")
+
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", fail)
+    g = Graph(edges_from_pairs(spark, GRAPH_MAIN_TRI), num_partitions=4)
+    before = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="broadcast failed"):
+        triangle_count(g)
+    assert _persisted_rdds(spark) == before
+    g.unpersist()

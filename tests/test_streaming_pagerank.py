@@ -133,7 +133,7 @@ def test_streaming_triangle_count_incremental(spark, tmp_path):
         spark.read.parquet(f"{work}/edges").select("src", "dst", "weight"),
         num_partitions=4,
     )
-    assert total == triangle_count(acc, strategy="wedge") == 3
+    assert total == triangle_count(acc) == 3
     got = {r.batch_id: r.n_triangles for r in spark.read.parquet(f"{work}/count").collect()}
     assert got[max(got)] == 3
 
