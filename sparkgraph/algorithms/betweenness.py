@@ -31,12 +31,17 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from sparkgraph.graph import Graph
-from sparkgraph.pregel import MAX_FIXPOINT_ITERS, PregelResult, SuperstepLoop, truncate_lineage
+from sparkgraph.pregel import (
+    MAX_FIXPOINT_ITERS,
+    PregelResult,
+    SuperstepLoop,
+    truncate_lineage,
+    warn_unconverged,
+)
 
 # Measured on the 138 M-sym-edge LiveJournal run (BENCH.md round 4): 1e5
 # (pivot, id) groups per partition kept the per-depth hash maps inside a
@@ -66,21 +71,20 @@ def betweenness_sampled(
     pivots: list[int] | None = None,
     normalize: bool = True,
     max_depth: int = MAX_FIXPOINT_ITERS,
-    rows_per_partition: int = SIGMA_ROWS_PER_PARTITION,
 ) -> PregelResult:
     """Returns state ``(id, betweenness: double)`` — Brandes dependency sums
     from ``k`` pivot sources, scaled by n/k (unbiased estimator of the exact
     all-sources value; exact when the pivots cover every vertex).
     Endpoint convention: endpoints excluded (Brandes), undirected halving
-    applied. ``normalize`` divides by (n-1)(n-2)/2."""
+    applied. ``normalize`` divides by (n-1)(n-2)/2. ``converged`` is False
+    iff ``max_depth`` cut a live BFS frontier."""
     spark = graph.spark
-    simple = graph.simple_undirected()
     sym = truncate_lineage(
-        simple.unionByName(
-            simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).repartition(graph.num_partitions, "u")
+        graph.simple_sym()
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .repartition(graph.num_partitions, "src")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    verts = sym.select(F.col("u").alias("id")).distinct()
+    verts = sym.select(F.col("src").alias("id")).distinct()
     n = verts.count()
     if n == 0:
         raise ValueError("graph has no vertices")
@@ -88,86 +92,58 @@ def betweenness_sampled(
         pivots = [r.id for r in verts.orderBy("id").limit(k).collect()]
     k = len(pivots)
     session_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    sigma_p = sigma_shuffle_partitions(n, k, session_p, rows_per_partition)
+    sigma_p = sigma_shuffle_partitions(n, k, session_p, SIGMA_ROWS_PER_PARTITION)
+    sized = sigma_p > session_p
     loop = SuperstepLoop(
         "betweenness",
         {"k": k, "normalize": normalize, "sigma_partitions": sigma_p},
     )
 
-    def _sized(df: DataFrame, *cols: str) -> DataFrame:
-        """Pre-shuffle onto the derived partition count, keyed by the
-        grouping columns, so the following groupBy reuses the distribution
-        (no second shuffle) with bounded per-partition hash maps. No-op at
-        gate scale (sigma_p == session default → plans unchanged)."""
-        if sigma_p <= session_p:
-            return df
-        return df.repartition(sigma_p, *[F.col(c) for c in cols])
-
-    # forward phase: (pivot, id, depth, sigma = #shortest paths)
-    pivot_df = spark.createDataFrame([(p,) for p in pivots], "pivot long")
-    state = truncate_lineage(
-        pivot_df.select(
-            "pivot", F.col("pivot").alias("id"), F.lit(0).alias("depth"),
-            F.lit(1.0).alias("sigma"),
-        )
+    # forward phase: (pivot, id, depth, sigma = #shortest paths), the path
+    # counts of a level summed over its predecessors. Past the session
+    # default, the sigma and dependency aggregations pre-shuffle onto the
+    # derived partition count, keyed by their grouping columns, so each
+    # groupBy reuses that distribution with bounded per-partition hash maps.
+    sources = spark.createDataFrame([(p,) for p in pivots], "pivot long").select(
+        "pivot", F.col("pivot").alias("id"), F.lit(0).alias("depth"),
+        F.lit(1.0).alias("sigma"),
     )
-    frontier = state
-    step = 0
-    depth = 0
-    while depth < max_depth:
-        loop.step_started()
-        msgs = sym.join(
-            frontier.withColumnRenamed("id", "u").hint("shuffle_hash"), "u"
-        ).select("pivot", F.col("v").alias("id"), "sigma")
-        # candidate next level: path counts sum over predecessors
-        cand = _sized(msgs, "pivot", "id").groupBy("pivot", "id").agg(
-            F.sum("sigma").alias("sigma")
-        )
-        new = truncate_lineage(
-            cand.join(state.select("pivot", "id"), ["pivot", "id"], "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-            .select("pivot", "id", "depth", "sigma")
-        )
-        n_new = new.count()
-        step += 1
-        loop.step_done(state, step, changed=n_new)
-        if n_new == 0:
-            break
-        state = truncate_lineage(state.unionByName(new))
-        frontier = new
-        depth += 1
+    state, step, complete = loop.reach(
+        sym, sources, ["pivot"], 0, max_depth,
+        gather=F.sum("sigma").alias("sigma"), partitions=sigma_p if sized else None,
+    )
+    if not complete:
+        warn_unconverged("betweenness", step, max_depth, knob="max_depth", unit="BFS levels")
+    depth = step - 1 if complete else step  # the last level of a complete BFS is empty
 
     # backward phase: delta(u) += sigma(u)/sigma(v) * (1 + delta(v)) over
     # tree edges u→v with depth(v) = depth(u)+1, walking depths max→1
     state = state.persist(StorageLevel.MEMORY_AND_DISK)
     delta = state.select("pivot", "id", F.lit(0.0).alias("delta"))
     su = state.select(
-        "pivot", F.col("id").alias("u"), F.col("depth").alias("du"),
+        "pivot", F.col("id").alias("src"), F.col("depth").alias("du"),
         F.col("sigma").alias("sigu"),
     )
     sv = state.select(
-        "pivot", F.col("id").alias("v"), F.col("depth").alias("dv"),
+        "pivot", F.col("id").alias("dst"), F.col("depth").alias("dv"),
         F.col("sigma").alias("sigv"),
     )
     tree = truncate_lineage(
-        sym.join(su, "u")
-        .join(sv, ["pivot", "v"])
+        sym.join(su, "src")
+        .join(sv, ["pivot", "dst"])
         .filter(F.col("dv") == F.col("du") + 1)
-        .select("pivot", "u", "v", "du", "dv", "sigu", "sigv")
+        .select("pivot", "src", "dst", "du", "dv", "sigu", "sigv")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     for d in range(depth - 1, -1, -1):
         loop.step_started()
         dl = delta.select(
-            "pivot", F.col("id").alias("v"), F.col("delta").alias("dv_delta")
+            "pivot", F.col("id").alias("dst"), F.col("delta").alias("dv_delta")
         )
-        contrib = (
-            _sized(tree.filter(F.col("du") == d).join(dl, ["pivot", "v"]), "pivot", "u")
-            .groupBy("pivot", F.col("u").alias("id"))
-            .agg(
-                F.sum(
-                    (F.col("sigu") / F.col("sigv")) * (1.0 + F.col("dv_delta"))
-                ).alias("inc")
-            )
+        contrib = tree.filter(F.col("du") == d).join(dl, ["pivot", "dst"])
+        if sized:
+            contrib = contrib.repartition(sigma_p, F.col("pivot"), F.col("src"))
+        contrib = contrib.groupBy("pivot", F.col("src").alias("id")).agg(
+            F.sum((F.col("sigu") / F.col("sigv")) * (1.0 + F.col("dv_delta"))).alias("inc")
         )
         delta = truncate_lineage(
             delta.join(contrib, ["pivot", "id"], "left").select(
@@ -196,4 +172,4 @@ def betweenness_sampled(
     state.unpersist()
     tree.unpersist()
     sym.unpersist()
-    return loop.finish(out, step, converged=True, result=out)
+    return loop.finish(out, step, converged=complete, result=out)

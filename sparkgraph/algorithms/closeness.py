@@ -40,19 +40,18 @@ def _pivot_bfs(
     algorithm: str,
 ) -> tuple[DataFrame, DataFrame, int, list[int], SuperstepLoop, int, bool]:
     """Shared multi-pivot level-synchronous BFS over the simple undirected
-    graph. Returns ``(state, verts, n, pivots, loop, step, complete)``
-    where state is the first-seen table ``(pivot, id, depth)``
-    (lineage-truncated — the symmetrized edge cache is already released)
-    and ``complete`` is False iff the depth ceiling cut a live frontier
-    (the BFS, and anything derived from it, is then a truncation)."""
-    spark = graph.spark
-    simple = graph.simple_undirected()
+    graph (``SuperstepLoop.reach`` keyed by pivot). Returns ``(state, verts,
+    n, pivots, loop, step, complete)`` where state is the first-seen table
+    ``(pivot, id, depth)`` (lineage-truncated — the symmetrized edge cache is
+    already released) and ``complete`` is False iff the depth ceiling cut a
+    live frontier (the BFS, and anything derived from it, is then a
+    truncation)."""
     sym = truncate_lineage(
-        simple.unionByName(
-            simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).repartition(graph.num_partitions, "u")
+        graph.simple_sym()
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .repartition(graph.num_partitions, "src")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    verts = sym.select(F.col("u").alias("id")).distinct()
+    verts = sym.select(F.col("src").alias("id")).distinct()
     n = verts.count()
     if n == 0:
         raise ValueError("graph has no vertices")
@@ -60,38 +59,13 @@ def _pivot_bfs(
         pivots = [r.id for r in verts.orderBy("id").limit(k).collect()]
     loop = SuperstepLoop(algorithm, {"k": len(pivots)})
 
-    pivot_df = spark.createDataFrame([(p,) for p in pivots], "pivot long")
-    state = truncate_lineage(
-        pivot_df.select("pivot", F.col("pivot").alias("id"), F.lit(0).alias("depth"))
+    sources = graph.spark.createDataFrame([(p,) for p in pivots], "pivot long").select(
+        "pivot", F.col("pivot").alias("id"), F.lit(0).alias("depth")
     )
-    frontier = state
-    step = 0
-    depth = 0
-    complete = False
-    while depth < max_depth:
-        loop.step_started()
-        cand = (
-            sym.join(frontier.withColumnRenamed("id", "u").hint("shuffle_hash"), "u")
-            .select("pivot", F.col("v").alias("id"))
-            .distinct()
-        )
-        new = truncate_lineage(
-            cand.join(state.select("pivot", "id"), ["pivot", "id"], "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-        )
-        n_new = new.count()
-        step += 1
-        loop.step_done(state, step, changed=n_new)
-        if n_new == 0:
-            complete = True
-            break
-        state = truncate_lineage(state.unionByName(new))
-        frontier = new
-        depth += 1
-
+    state, step, complete = loop.reach(sym, sources, ["pivot"], 0, max_depth)
     sym.unpersist()
     if not complete:
-        warn_unconverged(algorithm, step, max_depth)
+        warn_unconverged(algorithm, step, max_depth, knob="max_depth", unit="BFS levels")
     return state, verts, n, pivots, loop, step, complete
 
 

@@ -45,10 +45,7 @@ def greedy_coloring(
     undirected graph (no edge joins two equal colors). Deterministic for a
     given mixer; independent of partitioning. ``converged`` is True iff
     every vertex was colored within ``max_iter`` rounds."""
-    simple = graph.simple_undirected()
-    sym = truncate_lineage(
-        simple.unionByName(simple.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
+    sym = truncate_lineage(graph.simple_sym())
     live = truncate_lineage(sym.select(F.col("u").alias("id")).distinct())
     loop = SuperstepLoop("coloring", {"mixer": mixer, "max_iter": max_iter})
 

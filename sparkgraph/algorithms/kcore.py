@@ -24,10 +24,7 @@ def k_core(graph: Graph, k: int, max_iter: int = 50) -> PregelResult:
     """Returns state ``(id,)`` — the vertices of the k-core (possibly empty).
     ``converged`` is True iff the peeling reached its fixpoint (an empty
     sub-k frontier) within ``max_iter`` rounds."""
-    simple = graph.simple_undirected()  # (u < v), deduped, loop-free
-    sym = simple.unionByName(
-        simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
+    sym = graph.simple_sym().persist()
     loop = SuperstepLoop("k_core", {"k": k, "max_iter": max_iter})
 
     # full degrees once; thereafter only decrements
@@ -82,10 +79,7 @@ def coreness(graph: Graph, max_iter: int = 100) -> PregelResult:
     makes the tail rounds near-free. Results are bit-identical to the
     full-rescore loop round-by-round. Prefer ``k_core`` when only one
     threshold matters. Returns state ``(id, coreness: long)``."""
-    simple = graph.simple_undirected()
-    sym = simple.unionByName(
-        simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).repartition(graph.num_partitions, "u").persist()
+    sym = graph.simple_sym().repartition(graph.num_partitions, "u").persist()
     loop = SuperstepLoop("coreness", {"max_iter": max_iter})
 
     state = truncate_lineage(

@@ -51,10 +51,7 @@ def maximal_independent_set(
     """Returns state ``(id,)`` — an inclusion-maximal independent set of the
     simple graph. ``converged`` is True iff every vertex was decided within
     ``max_iter`` rounds."""
-    simple = graph.simple_undirected()
-    edges = truncate_lineage(
-        simple.unionByName(simple.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    )
+    edges = truncate_lineage(graph.simple_sym())
     live = truncate_lineage(edges.select(F.col("u").alias("id")).distinct())
     loop = SuperstepLoop("mis", {"mixer": mixer, "max_iter": max_iter})
 

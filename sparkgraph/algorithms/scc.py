@@ -55,6 +55,16 @@ def strongly_connected_components(
     )
     loop = SuperstepLoop("scc", {"max_rounds": max_rounds})
 
+    # forward coloring: a changed vertex sends its color; the min wins
+    fwd_scatter = [F.col("id").alias("src"), F.col("color").alias("fcol")]
+    fwd_gather = F.min("fcol").alias("mcol")
+    offered = F.coalesce("mcol", F.col("color"))
+    fwd_apply = [
+        "id",
+        F.least("color", offered).alias("color"),
+        (offered < F.col("color")).alias("changed"),
+    ]
+
     done = None  # (id, scc) accumulated labels
     active = truncate_lineage(verts)
     step = 0
@@ -102,60 +112,25 @@ def strongly_connected_components(
             active.select("id", F.col("id").alias("color"),
                           F.lit(True).alias("changed"))
         )
-        while step < max_iter:
-            loop.step_started()
-            frontier = color.filter("changed").select(
-                F.col("id").alias("src"), F.col("color").alias("fcol")
-            )
-            msgs = ae.join(frontier.hint("shuffle_hash"), "src").select(
-                F.col("dst").alias("id"), F.col("fcol").alias("msg")
-            )
-            mins = msgs.groupBy("id").agg(F.min("msg").alias("mcol"))
-            color = truncate_lineage(
-                color.drop("changed").join(mins, "id", "left").select(
-                    "id",
-                    F.least("color", F.coalesce("mcol", F.col("color"))).alias("color"),
-                    (F.coalesce("mcol", F.col("color")) < F.col("color")).alias("changed"),
-                )
-            )
-            changed = color.filter("changed").count()
-            step += 1
-            loop.step_done(color, step, changed=changed)
-            if changed == 0:
-                break
-        color = color.drop("changed")
+        color, step, _ = loop.relax(
+            ae, color, step, max_iter, fwd_scatter, fwd_gather, fwd_apply
+        )
 
         # 2) backward sweep from roots, confined to each root's color class:
-        #    member(v) ⇐ edge v→u, member(u), color(v) = color(u)
+        #    member(v) ⇐ edge v→u, member(u), color(v) = color(u). The BFS
+        #    runs over the reversed same-color edges, keyed by color; a vertex
+        #    only ever meets its own color, so (color, id) visits like id.
         csrc = color.select(F.col("id").alias("src"), F.col("color").alias("csrc"))
         cdst = color.select(F.col("id").alias("dst"), F.col("color").alias("cdst"))
-        same = truncate_lineage(
+        back = truncate_lineage(
             ae.join(csrc, "src").join(cdst, "dst").filter(
                 F.col("csrc") == F.col("cdst")
-            ).select("src", "dst")
+            ).select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        member = truncate_lineage(
-            color.filter(F.col("id") == F.col("color")).select("id", "color")
+        roots = color.filter(F.col("id") == F.col("color")).select(
+            "id", "color", F.lit(0).alias("depth")
         )
-        frontier = member
-        while step < max_iter:
-            loop.step_started()
-            new = (
-                same.join(
-                    frontier.withColumnRenamed("id", "dst").hint("shuffle_hash"),
-                    "dst",
-                )
-                .select(F.col("src").alias("id"), "color")
-                .distinct()
-                .join(member, "id", "left_anti")
-            )
-            n_new = new.count()
-            step += 1
-            loop.step_done(member, step, changed=n_new)
-            if n_new == 0:
-                break
-            frontier = truncate_lineage(new)
-            member = truncate_lineage(member.unionByName(new))
+        member, step, _ = loop.reach(back, roots, ["color"], step, max_iter)
 
         labeled = member.select("id", F.col("color").alias("scc"))
         done = labeled if done is None else done.unionByName(labeled)

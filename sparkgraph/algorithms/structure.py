@@ -14,13 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparkgraph.graph import Graph
-
-
-def _simple_sym(graph: Graph):
-    simple = graph.simple_undirected()
-    return simple.unionByName(
-        simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+from sparkgraph.pregel import SuperstepLoop
 
 
 def link_prediction(
@@ -39,7 +33,7 @@ def link_prediction(
     almost no signal (Adamic-Adar already down-weights them as 1/ln d), so
     capping changes rankings negligibly while bounding the shuffle at
     Σ min(deg, cap)². Pass ``None`` only for exact small-graph sweeps."""
-    sym = _simple_sym(graph)
+    sym = graph.simple_sym()
     deg = sym.groupBy(F.col("u").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     if max_wedge_degree is not None:
         ok = deg.filter(F.col("deg") <= max_wedge_degree).select(
@@ -92,7 +86,7 @@ def global_clustering_coefficient(graph: Graph) -> DataFrame:
     from sparkgraph.algorithms.triangles import triangle_count
 
     t = triangle_count(graph)
-    sym = _simple_sym(graph)
+    sym = graph.simple_sym()
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     w = deg.agg(F.sum(F.col("deg") * (F.col("deg") - 1) / 2).alias("w")).collect()[0][
         "w"
@@ -123,7 +117,7 @@ def local_clustering(graph: Graph) -> DataFrame:
         .unionByName(tri.select(F.col("tc").alias("id")))
     )
     tcount = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
-    sym = _simple_sym(graph)
+    sym = graph.simple_sym()
     deg = sym.groupBy(F.col("u").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     return deg.join(tcount, "id", "left").select(
         "id",
@@ -146,7 +140,7 @@ def degree_assortativity(graph: Graph) -> DataFrame:
     pairs of the simple symmetrized view (each undirected edge counted both
     ways, the standard convention). All sums are integer-exact before the one
     final double division, so results are bit-stable across engines."""
-    sym = _simple_sym(graph)
+    sym = graph.simple_sym()
     deg = sym.groupBy(F.col("u").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     pairs = (
         sym.join(deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), "u")
@@ -168,25 +162,22 @@ def degree_assortativity(graph: Graph) -> DataFrame:
 
 def ego_network(graph: Graph, center: int, radius: int = 2) -> DataFrame:
     """Induced subgraph of the ≤radius BFS ball around ``center`` on the
-    simple graph: canonical ``(u, v)`` edge rows (u < v). The frontier loop is
-    the standard scatter (message volume O(frontier degree)); the induced-edge
-    join is two semi-joins against the ball."""
-    sym = _simple_sym(graph).persist()
-    ball = graph.spark.createDataFrame([(center,)], "id long")
-    frontier = ball
-    for _ in range(radius):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("id", "u"), "u")
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(ball, "id", "left_anti")
-        )
-        ball = ball.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+    simple graph: canonical ``(u, v)`` edge rows (u < v). The ball is
+    ``SuperstepLoop.reach`` from the one source, ``radius`` levels at most
+    (message volume O(frontier degree); it stops early once the component is
+    exhausted); the induced-edge join is two semi-joins against the ball."""
+    sym = (
+        graph.simple_sym()
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .repartition(graph.num_partitions, "src")
+        .persist()
+    )
+    center_df = graph.spark.createDataFrame([(center, 0)], "id long, depth int")
+    ball, _, _ = SuperstepLoop("ego_network").reach(sym, center_df, [], 0, radius)
     out = (
         graph.simple_undirected()
-        .join(ball.withColumnRenamed("id", "u"), "u", "left_semi")
-        .join(ball.withColumnRenamed("id", "v"), "v", "left_semi")
+        .join(ball.select(F.col("id").alias("u")), "u", "left_semi")
+        .join(ball.select(F.col("id").alias("v")), "v", "left_semi")
         .select("u", "v")
     )
     sym.unpersist()
@@ -199,7 +190,7 @@ def modularity(graph: Graph, labels: DataFrame) -> DataFrame:
     intra-community edges, a_c = total degree of c, m = edge count. ``labels``
     is ``(id, label)`` (e.g. LPA or CC output). Integer sums, one final double
     expression — engine-stable."""
-    sym = _simple_sym(graph)
+    sym = graph.simple_sym()
     lu = labels.select(F.col("id").alias("u"), F.col("label").alias("cu"))
     lv = labels.select(F.col("id").alias("v"), F.col("label").alias("cv"))
     per_edge = sym.join(lu, "u").join(lv, "v")
@@ -238,7 +229,7 @@ def community_stats(graph: Graph, labels: DataFrame) -> DataFrame:
     until the final division, same exactness discipline as modularity().
     Communities of isolated vertices can't occur (edge-derived graphs);
     conductance of a community spanning everything is 0 by the min()."""
-    sym = _simple_sym(graph)
+    sym = graph.simple_sym()
     lu = labels.select(F.col("id").alias("u"), F.col("label").alias("cu"))
     lv = labels.select(F.col("id").alias("v"), F.col("label").alias("cv"))
     per_edge = sym.join(lu, "u").join(lv, "v")
@@ -281,7 +272,7 @@ def two_hop_sizes(graph: Graph, max_degree: int | None = None) -> DataFrame:
     join (the hubs are exactly where Σ deg² explodes); capped results are a
     documented UNDERCOUNT through those hubs — at web scale prefer the cap
     or an HLL sketch over the exact path. No driver state, no windows."""
-    sym = _simple_sym(graph)  # (u, v), both directions
+    sym = graph.simple_sym()  # (u, v), both directions
     mid = sym
     if max_degree is not None:
         ok = (

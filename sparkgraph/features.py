@@ -62,12 +62,7 @@ def feature_propagation(
     half like 1630/800000 = 0.0020375 exactly, where Java's
     shortest-decimal HALF_UP and a binary-value rounder legitimately
     disagree by 1e-6; the integers cannot)."""
-    simple = graph.simple_undirected()
-    sym = truncate_lineage(
-        simple.unionByName(
-            simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    )
+    sym = truncate_lineage(graph.simple_sym())
     x = features.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.transform(F.col(vec_col), lambda c: c.cast("double"))).alias(

@@ -138,6 +138,15 @@ class Graph:
             .distinct()
         )
 
+    def simple_sym(self) -> DataFrame:
+        """``simple_undirected`` with every edge in both directions: (u, v)
+        and (v, u). Not persisted: callers truncate, partition and persist it
+        as their loops need."""
+        simple = self.simple_undirected()
+        return simple.unionByName(
+            simple.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+
     def unpersist(self) -> None:
         for df in (self._edges_sym, self._degrees):
             if df is not None:

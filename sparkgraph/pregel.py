@@ -1,5 +1,5 @@
 """Superstep driver: lineage truncation, metrics, checkpoint/resume and the
-two superstep loops.
+three superstep loops.
 
 Replaces the reference's hand-rolled BSP runtime (SURVEY.md §2A A9/A10, §2B
 B7/B8): the master's ACK-counted barrier (master/master.go:404-450) becomes a
@@ -14,11 +14,15 @@ The reference writes its vertex programs against one ``Vertex`` API
 (api/api.go:9-22). Here ``SuperstepLoop.start`` is the one resume-or-init
 step of every checkpointable loop, and two loops take the shape of GraphX
 ``aggregateMessages``: ``SuperstepLoop.relax``, the frontier fixpoint of
-SSSP, CC, temporal reachability and DAG layering, and
-``SuperstepLoop.propagate``, the fixed-round or converge-to-``tol`` loop
+SSSP, CC, temporal reachability, DAG layering and SCC's forward coloring,
+and ``SuperstepLoop.propagate``, the fixed-round or converge-to-``tol`` loop
 whose gathered aggregate is the new state (PageRank in every mode, Katz,
 ``ppr_batch``). Each algorithm supplies only its scatter, gather and apply
-``Column``s.
+``Column``s. The third, ``SuperstepLoop.reach``, is the level-synchronous
+multi-source BFS whose state is the union of its frontiers: closeness,
+eccentricity and landmark distances, betweenness's forward phase, SCC's
+backward sweep and ego networks supply only their sources, their key and,
+for betweenness, the path-count aggregate.
 """
 
 from __future__ import annotations
@@ -215,12 +219,15 @@ class SuperstepLoop:
     superstep, optional convergence deltas, checkpoint writes and resume
     (A9/A10). ``start`` resumes or initializes a loop's state; ``relax`` runs
     the frontier fixpoint for min/max-relaxation loops; ``propagate`` runs
-    the loops whose ``groupBy`` aggregate is the whole new state. Loops of
-    another shape keep their own superstep and call
+    the loops whose ``groupBy`` aggregate is the whole new state; ``reach``
+    runs the multi-source BFS (closeness, eccentricity, landmarks,
+    betweenness's forward phase, SCC's backward sweep, ego networks). Loops
+    of another shape keep their own superstep and call
     ``step_started``/``step_done``: LPA's two-level vote, the multi-consumer
-    loops, HITS (two half-steps a superstep, each with a left-join apply and
-    a normalization collect) and feature propagation (a lazy,
-    self-inclusive union of the state and its messages).
+    loops (SCC's trim, betweenness's backward dependency walk among them),
+    HITS (two half-steps a superstep, each with a left-join apply and a
+    normalization collect) and feature propagation (a lazy, self-inclusive
+    union of the state and its messages).
     """
 
     def __init__(
@@ -363,6 +370,57 @@ class SuperstepLoop:
             if d is not None and d < tol:
                 return state, step, True
         return state, step, delta is None
+
+    def reach(
+        self, edges: DataFrame, visited: DataFrame, key: list[str], step: int,
+        max_iter: int, gather: Column | None = None, partitions: int | None = None,
+    ) -> tuple[DataFrame, int, bool]:
+        """Level-synchronous multi-source BFS from ``step`` up to ``max_iter``
+        levels: (visited, supersteps, complete). ``visited`` holds the sources
+        as ``(key…, id, depth, payload…)`` with depth 0; a vertex is visited
+        once per key (a pivot, a colour class). ``edges(src, dst)`` is
+        partitioned on ``src``.
+
+        Each level, the newest frontier selects ``(key…, id AS src,
+        payload…)`` and joins ``edges`` on ``src``; the messages reduce per
+        ``(key…, dst AS id)``, by ``distinct`` or, given ``gather``, by that
+        aggregate of the payload (``partitions``, when given, pre-shuffles
+        them onto that many partitions first). What the visited set does not
+        hold under its key is the next frontier, tagged with its depth and
+        unioned into ``visited``. The loop halts on an empty level. The
+        caller warns on ``max_iter``: only it knows whether that ceiling is
+        the lever.
+
+        Both truncations are lazy: a level's count is its one action, and it
+        materializes the level and the union before it, so a level's Spark
+        jobs do not grow with its depth and lineage never grows either."""
+        ids = [*key, "id"]
+        payload = [c for c in visited.columns if c not in ids and c != "depth"]
+        scatter = [*key, F.col("id").alias("src"), *payload]
+        msg = [*key, F.col("dst").alias("id"), *payload]
+        frontier = visited
+        depth = 0
+        while step < max_iter:
+            self.step_started()
+            msgs = edges.join(
+                frontier.select(*scatter).hint("shuffle_hash"), "src"
+            ).select(*msg)
+            if partitions:
+                msgs = msgs.repartition(partitions, *ids)
+            reduced = msgs.distinct() if gather is None else msgs.groupBy(*ids).agg(gather)
+            depth += 1
+            level = [F.lit(depth).alias(c) if c == "depth" else c for c in visited.columns]
+            frontier = truncate_lineage(
+                reduced.join(visited.select(*ids), ids, "left_anti").select(*level),
+                eager=False,
+            )
+            n_new = frontier.count()
+            step += 1
+            self.step_done(visited, step, changed=n_new)
+            if n_new == 0:
+                return visited, step, True
+            visited = truncate_lineage(visited.unionByName(frontier), eager=False)
+        return visited, step, False
 
     def step_started(self) -> None:
         self._t0 = time.monotonic()

@@ -1,4 +1,5 @@
-"""In-memory copies of the reference's bundled fixture graphs (FIXTURES.md §2)."""
+"""In-memory copies of the reference's bundled fixture graphs (FIXTURES.md §2),
+and a Spark job counter for tests that pin job counts."""
 
 GRAPH_MAIN = [  # client/test.txt — 18 edges, 23 vertices, 5 components
     (1, 4), (1, 18), (2, 3), (3, 4), (3, 5), (5, 8), (9, 10),
@@ -15,3 +16,17 @@ GRAPH_DOUBLED = [e for s, d in GRAPH_MAIN for e in ((s, d), (d, s))]
 
 # GRAPH_MAIN is triangle-free; adding (1, 3) creates exactly triangle {1,3,4}
 GRAPH_MAIN_TRI = GRAPH_MAIN + [(1, 3)]
+
+
+def count_jobs(spark, group, fn) -> tuple[int, object]:
+    """Spark jobs ``fn`` starts, counted through a job group that no other
+    call uses, and its result."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker reads the listener bus's output
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), res

@@ -80,16 +80,27 @@ def test_sigma_partition_math_pins_measured_envelope():
     assert sigma_shuffle_partitions(0, 0, 16) == 16
 
 
-def test_sized_aggregation_path_is_value_identical(spark):
+def test_sized_aggregation_path_is_value_identical(spark, monkeypatch):
     """Force the derived count ABOVE the session default (tiny
-    rows_per_partition) so the explicit repartition-before-groupBy path
+    SIGMA_ROWS_PER_PARTITION) so the explicit repartition-before-groupBy path
     executes, and pin its values against the default-path run — the
-    envelope knob must never change results, only the physical plan."""
+    envelope sizing must never change results, only the physical plan."""
+    from sparkgraph.algorithms import betweenness
+
     rng = random.Random(11)
     n = 24
     pairs = list({(rng.randrange(n), rng.randrange(n)) for _ in range(60)})
     pairs = [(a, b) for a, b in pairs if a != b]
     pivots = [0, 1, 2]
     base = _run(spark, pairs, pivots=pivots)
-    sized = _run(spark, pairs, pivots=pivots, rows_per_partition=2)
+    monkeypatch.setattr(betweenness, "SIGMA_ROWS_PER_PARTITION", 2)
+    sized = _run(spark, pairs, pivots=pivots)
     assert _close(sized, base, tol=1e-9)
+
+
+def test_depth_ceiling_reports_not_converged(spark):
+    """A ``max_depth`` that cuts a live BFS frontier makes the result a
+    truncation, and ``converged`` says so (as in harmonic closeness)."""
+    g = Graph(spark.createDataFrame([(i, i + 1) for i in range(4)], "src long, dst long"))
+    assert betweenness_sampled(g, pivots=[0], max_depth=1).converged is False
+    assert betweenness_sampled(g, pivots=[0]).converged is True

@@ -7,7 +7,7 @@ import math
 from sparkgraph.algorithms.closeness import harmonic_closeness_sampled
 from sparkgraph.graph import Graph
 
-from tests.fixtures import GRAPH_MAIN
+from tests.fixtures import GRAPH_MAIN, count_jobs
 from tests.oracles import bfs_oracle
 
 INF = float("inf")
@@ -125,3 +125,19 @@ def test_landmark_estimate_upper_bounds_true_distance(spark):
     for (u, v), e in est.items():
         if u in lms:
             assert e == bfs_oracle(GRAPH_MAIN, u)[v], (u, v)
+
+
+def test_landmark_jobs_per_bfs_level_do_not_grow(spark):
+    """A BFS level is a bounded number of Spark jobs: on a path, 8 more
+    levels cost at most 4 jobs each."""
+    from sparkgraph.algorithms.closeness import landmark_distances
+
+    jobs = {}
+    for depth in (8, 16):
+        g = Graph(spark.createDataFrame([(i, i + 1) for i in range(depth)], "src long, dst long"))
+        jobs[depth], res = count_jobs(
+            spark, f"landmarks-{depth}",
+            lambda: landmark_distances(g, landmarks=[0]),
+        )
+        assert res.converged and res.supersteps == depth + 1
+    assert jobs[16] - jobs[8] <= 4 * 8, jobs

@@ -15,7 +15,7 @@ from sparkgraph.algorithms.structure import (
 from sparkgraph.graph import Graph
 from sparkgraph.io.edgelist import edges_from_pairs
 
-from tests.fixtures import GRAPH_MAIN, GRAPH_MAIN_TRI
+from tests.fixtures import GRAPH_MAIN, GRAPH_MAIN_TRI, count_jobs
 from tests.oracles import components_oracle
 
 
@@ -116,6 +116,20 @@ def test_ego_network_matches_bfs_ball(spark):
     for center, radius in [(1, 1), (1, 2), (3, 2), (12, 1), (100, 3)]:
         got = {(r.u, r.v) for r in ego_network(g, center, radius).collect()}
         assert got == _ego_oracle(GRAPH_MAIN, center, radius), (center, radius)
+    g.unpersist()
+
+
+def test_ego_network_jobs_grow_linearly_in_radius(spark):
+    """Each BFS level runs a bounded number of Spark jobs, so on a path
+    (one new vertex per level) doubling the radius from 8 to 16 adds about
+    twice the jobs that 4 to 8 added, not the quadratic growth of a ball
+    whose frontier re-runs every earlier level."""
+    g = Graph(edges_from_pairs(spark, [(i, i + 1) for i in range(24)]), num_partitions=4)
+    jobs = {
+        r: count_jobs(spark, f"ego-{r}", lambda: ego_network(g, 0, r).count())[0]
+        for r in (4, 8, 16)
+    }
+    assert jobs[16] - jobs[8] <= 2.5 * (jobs[8] - jobs[4]), jobs
     g.unpersist()
 
 
